@@ -433,6 +433,37 @@ def incremental_dedup_indexed(
 NGRAM_DF_CAP = 64  # drop shingles present in more docs (stop-shingle guard)
 
 
+def _capped_shingles(
+    df: DataFrame, id_col: str, text_col: str, k: int, doc_freq_cap: int | None
+) -> DataFrame:
+    """`shingle_rows` minus the stop-shingles (doc frequency above
+    `doc_freq_cap`; None keeps every shingle), materialized once
+    (localCheckpoint) for the pair builders' four plan references.
+
+    With a cap, the uncapped rows feed two references of their own (the
+    hot-shingle count and the anti-join), so they are persisted for that
+    and released once the capped frame's eager checkpoint has run: a call
+    leaves exactly one block set behind, not two."""
+    ex = shingle_rows(df, id_col, text_col, k)
+    if doc_freq_cap is None:
+        return ex if ex.isStreaming else ex.localCheckpoint(eager=True)
+    pre = ex if ex.isStreaming else ex.persist()
+    # shingle_rows is distinct per doc, so count(*) == doc frequency.
+    hot = (
+        pre.groupBy("sh")
+        .agg(F.count("*").alias("df"))
+        .where(F.col("df") > doc_freq_cap)
+        .select("sh")
+    )
+    # No broadcast pin: the hot set is bounded by rows/cap, which still
+    # grows with the corpus — let AQE pick broadcast only while it fits.
+    ex = pre.join(hot, "sh", "left_anti")
+    if not ex.isStreaming:
+        ex = ex.localCheckpoint(eager=True)
+        pre.unpersist()
+    return ex
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -467,24 +498,7 @@ def ngram_jaccard_pairs(
     `lsh_candidate_pairs`. Same eager side effects as there (job at
     construction, session-lifetime blocks, recompute on executor loss).
     """
-    ex = shingle_rows(df, id_col, text_col, k)
-    if not ex.isStreaming:
-        ex = ex.localCheckpoint(eager=True)
-    if doc_freq_cap is not None:
-        # shingle_rows is distinct per doc, so count(*) == doc frequency.
-        hot = (
-            ex.groupBy("sh")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") > doc_freq_cap)
-            .select("sh")
-        )
-        # No broadcast pin: the hot set is bounded by rows/cap, which still
-        # grows with the corpus — let AQE pick broadcast only while it fits.
-        ex = ex.join(hot, "sh", "left_anti")
-        # the anti-join (and the hot agg above it) would otherwise re-run
-        # once per downstream reference (sizes + both join sides)
-        if not ex.isStreaming:
-            ex = ex.localCheckpoint(eager=True)
+    ex = _capped_shingles(df, id_col, text_col, k, doc_freq_cap)
     sizes = ex.groupBy("doc").agg(F.count("*").alias("n_sh"))
     a, b = ex.alias("a"), ex.alias("b")
     shared = (
@@ -949,19 +963,7 @@ def containment_pairs(
     coefficient is bit-identical across engines. Shingle table and
     capped table materialize once for the four plan references, as
     there (guide §8; same eager side effects)."""
-    ex = shingle_rows(df, id_col, text_col, k)
-    if not ex.isStreaming:
-        ex = ex.localCheckpoint(eager=True)
-    if doc_freq_cap is not None:
-        hot = (
-            ex.groupBy("sh")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") > doc_freq_cap)
-            .select("sh")
-        )
-        ex = ex.join(hot, "sh", "left_anti")
-        if not ex.isStreaming:
-            ex = ex.localCheckpoint(eager=True)
+    ex = _capped_shingles(df, id_col, text_col, k, doc_freq_cap)
     sizes = ex.groupBy("doc").agg(F.count("*").alias("n_sh"))
     a, b = ex.alias("a"), ex.alias("b")
     shared = (

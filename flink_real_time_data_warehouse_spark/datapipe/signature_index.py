@@ -28,8 +28,8 @@ a `storage.TxLog` table whose files are partitioned by ``(tbl, batch)``:
   conflict rule (concurrent appends never conflict with it).
 
 Scale shape: append cost is O(batch) — one signature pass over the new
-docs, never a rewrite of history (unlike a DimStore MERGE, which rewrites
-the snapshot). Probe tables carry ~40 bytes/doc — the index for a
+docs, never a rewrite of history (unlike a dim-table MERGE, which rewrites
+the files it touches). Probe tables carry ~40 bytes/doc — the index for a
 10^10-doc corpus is ~hundreds of GB, scanned only by digest/bucket
 semi-joins that reduce map-side.
 

@@ -1,8 +1,8 @@
 """Type-2 slowly-changing-dimension history builder.
 
 The reference's dim layer is type-1 (Phoenix upsert overwrites in place —
-DimSinkFunction.java:17-89; our `sources/dim_store.DimStore` MERGE is the
-same semantics). A warehouse also needs the type-2 view: every attribute
+DimSinkFunction.java:17-89; our dim tables' `storage.TxLog` MERGE /
+CDC apply is the same semantics). A warehouse also needs the type-2 view: every attribute
 change opens a new validity interval instead of overwriting, so facts can
 join the dimension *as of* their event time. This operator derives that
 history from any timestamped change stream (CDC envelopes, event logs).

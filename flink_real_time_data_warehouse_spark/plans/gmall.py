@@ -1307,8 +1307,8 @@ _SERVING_CACHE: dict = {}
 
 
 def _serving_api(spark: SparkSession, sf_dir: str):
-    """Process-cached ServingAPI per (session, sf_dir): materialize runs
-    once per refresh, reads answer from the store — the reference's
+    """Process-cached ServingAPI per (session, sf_dir), materialized once
+    when it is created; reads answer from the store — the reference's
     pipeline-maintains / publisher-reads split."""
     from ..serving import ServingAPI
 
@@ -1316,6 +1316,7 @@ def _serving_api(spark: SparkSession, sf_dir: str):
     api = _SERVING_CACHE.get(key)
     if api is None:
         api = ServingAPI(spark, sf_dir)
+        api.materialize()
         _SERVING_CACHE[key] = api
     return api
 

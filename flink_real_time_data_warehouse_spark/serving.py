@@ -9,24 +9,27 @@ product_stats where toYYYYMMDD(stt)=#{date}` (ProductStatsMapper.java:12-13)
 never the raw facts.
 
 Same split here: `materialize()` runs the pipeline aggregates once and
-writes them as result tables (the ClickHouse role, played by parquet; a
-production deployment points this at the streaming sinks); the read
-methods answer from those tables only. A serving call must never rescan
-the fact table — the test asserts the read plan touches no fact files.
-HTTP framing stays out of engine scope, as the reference keeps it in a
-separate module.
+commits them as result tables (the ClickHouse role, played by one
+`storage.TxLog` table each; a production deployment points this at the
+streaming sinks); the read methods answer from those tables only. A
+serving call must never rescan the fact table — the test asserts the read
+plan touches no fact files. Reads never refresh and never write: each
+read sees the last committed refresh whole, even while a `materialize()`
+is running beside it, and a read of a store that was never materialized
+raises the log's "has no commits" error. HTTP framing stays out of
+engine scope, as the reference keeps it in a separate module.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
-
-from .session import mkscratch
 from datetime import date as _date
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from .session import mkscratch
+from .storage import TxLog
 
 
 class ServingAPI:
@@ -34,49 +37,34 @@ class ServingAPI:
         self.spark = spark
         self.sf_dir = sf_dir
         self.store_dir = store_dir or mkscratch(prefix="serving_store_")
+        self.logs = {
+            name: TxLog(os.path.join(self.store_dir, name))
+            for name in ("gmv_daily", "product_revenue")
+        }
 
     # -- materialization (the streaming pipeline -> ClickHouse leg) --------
-    def _path(self, name: str) -> str:
-        return os.path.join(self.store_dir, name)
-
-    def materialized(self, name: str = "gmv_daily") -> bool:
-        return os.path.exists(os.path.join(self._path(name), "_SUCCESS"))
-
     def materialize(self) -> None:
-        """Write the serving result tables from the registry pipelines —
+        """Commit the serving result tables from the registry pipelines —
         run once per refresh (per trigger when fed by the streaming sinks),
-        NOT per API call."""
+        NOT per API call. Each table is replaced in one log commit."""
         from .queries import registry
 
         reg = registry()
-        reg["serving_gmv"].spark(self.spark, self.sf_dir).write.mode("overwrite").parquet(
-            self._path("gmv_daily")
-        )
+        self.logs["gmv_daily"].overwrite(reg["serving_gmv"].spark(self.spark, self.sf_dir))
         # product_revenue carries integer CENTS (amount_c): order_amount is
         # net_cents/100.0, so round(x*100) recovers the exact cents and the
         # serving aggregations stay order-independent across engines
         # (functions/money.py discipline) instead of summing doubles.
-        (
+        self.logs["product_revenue"].overwrite(
             reg["product_stats"].spark(self.spark, self.sf_dir)
             .groupBy("sku_id", "sku_name", "tm_name")
             .agg(F.sum(F.round(F.col("order_amount") * 100).cast("long")).alias("amount_c"))
-            .write.mode("overwrite")
-            .parquet(self._path("product_revenue"))
         )
 
-    def _ensure(self, name: str) -> None:
-        # Check the _SUCCESS marker of the SPECIFIC table being read: if a
-        # previous materialize() crashed between writing gmv_daily and
-        # product_revenue, a gmv_daily-only check would leave the second
-        # table missing (throw) or stale forever.
-        if not self.materialized(name):
-            self.materialize()
-
     def result_table(self, name: str):
-        """The DataFrame a serving read answers from — always a
-        materialized result table, never the raw facts."""
-        self._ensure(name)
-        return self.spark.read.parquet(self._path(name))
+        """The DataFrame a serving read answers from — the last committed
+        version of a materialized result table, never the raw facts."""
+        return self.logs[name].snapshot(self.spark)
 
     # -- reads (SugarController endpoints) ---------------------------------
     def gmv(self, day: str | None = None) -> dict:

@@ -10,9 +10,11 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
+from collections.abc import Callable
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Runtime-settable confs we need for oracle parity and scale; applied even when
 # the caller (e.g. the grading driver) hands us an already-built session.
@@ -97,12 +99,7 @@ def mkscratch(prefix: str) -> str:
 
 #: compressed source bytes per streaming shuffle/state partition. Parquet
 #: expands ~2-4x in memory, so 32 MB compressed lands partitions in the
-#: guide's §2.2 100 MB-1 GB working range. Override the derived count
-#: entirely with SPARK_GRAFT_STREAM_PARTS (the spark-submit-level knob a
-#: cluster deployment would set; state-store count per trigger scales
-#: linearly with it, so it is the streaming analogue of sizing
-#: spark.sql.shuffle.partitions to data volume, which AQE cannot do for
-#: streaming state).
+#: guide's §2.2 100 MB-1 GB working range.
 STREAM_PART_BYTES = 32 * 1024 * 1024
 
 
@@ -141,13 +138,7 @@ def stream_partitions(spark: SparkSession, src_bytes: int | None, df=None) -> in
       dwd_chain 10.0 -> 8.4 s).
     - Large stateful aggs (big source, no stream-stream join): group
       state is wide and partial aggregation wants parallelism
-      (product_stats_stream 9.9 -> 14.4 s at 2 parts). KEEP.
-
-    SPARK_GRAFT_STREAM_PARTS overrides everything (the spark-submit
-    knob a cluster deployment sets)."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTS")
-    if env:
-        return max(1, int(env))
+      (product_stats_stream 9.9 -> 14.4 s at 2 parts). KEEP."""
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if not src_bytes:
         return cur
@@ -171,6 +162,12 @@ def stream_partitions(spark: SparkSession, src_bytes: int | None, df=None) -> in
     return cur
 
 
+#: serializes stream starts: the shuffle-partition conf is session-wide,
+#: so two threads starting queries on one session must not interleave
+#: their set/start/restore.
+_STREAM_START_LOCK = threading.RLock()
+
+
 @contextmanager
 def stream_start_conf(spark: SparkSession, src_bytes: int | None = None, df=None):
     """Set spark.sql.shuffle.partitions for a streaming query START and
@@ -181,22 +178,41 @@ def stream_start_conf(spark: SparkSession, src_bytes: int | None = None, df=None
     checkpoint metadata — and the restore cannot race the stream.
 
     The source volume comes from sources.streams' pending-bytes note
-    (each stream_table/stream_dir records its file sizes; draining at
-    start sums the sources built for THIS query — construction and
-    start are sequential per session, and a drained total that ever
-    includes a stray never-started source only mis-sizes a heuristic)."""
+    (each stream_table/stream_dir records its file sizes in the calling
+    thread; draining at start sums the sources this thread built for
+    THIS query — a drained total that ever includes a stray never-started
+    source only mis-sizes a heuristic). One module lock is held from the
+    drain through the restore, so concurrent starts on one session
+    (e.g. a router and a DWS leg started from two threads) each freeze
+    their own count and the session's value is always put back."""
     from .sources import streams  # local import: streams imports this module
 
-    drained = streams.drain_pending_bytes()
-    n = stream_partitions(
-        spark, src_bytes if src_bytes is not None else drained, df=df
-    )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    with _STREAM_START_LOCK:
+        drained = streams.drain_pending_bytes()
+        n = stream_partitions(
+            spark, src_bytes if src_bytes is not None else drained, df=df
+        )
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def start_foreach_batch(
+    stream: DataFrame, on_batch: Callable[[DataFrame, int], None], checkpoint: str
+):
+    """Start `on_batch` as an availableNow foreachBatch query over
+    `stream`, its shuffle/state partitions sized by stream_start_conf.
+    Returns the StreamingQuery."""
+    with stream_start_conf(stream.sparkSession, df=stream):
+        return (
+            stream.writeStream.foreachBatch(on_batch)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
 
 
 def tune_session(spark: SparkSession) -> SparkSession:

@@ -18,15 +18,15 @@ with the op normalization `create`->`insert` (:74-79) and read→filtered.
 
 from __future__ import annotations
 
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType, StringType, StructField, StructType
 
-from .dim_store import DimStore
-from ..session import mkscratch
+from ..session import mkscratch, start_foreach_batch
+from ..storage import TxLog
+from .streams import _note_src_bytes
 
 
 def cdc_schema() -> StructType:
@@ -51,19 +51,21 @@ def parse_cdc(raw: DataFrame, raw_col: str = "value") -> DataFrame:
 
 
 def apply_cdc_changes(
-    store: DimStore,
-    table_name: str,
+    log: TxLog,
     changes: DataFrame,
     key: str = "id",
     op_col: str = "op",
     seq_col: str = "seq",
 ):
-    """Apply one batch of flattened CDC changes to the keyed store.
+    """Apply one batch of flattened CDC changes to the keyed dim table.
 
     Reduces to the last op per key first (ordered by seq_col — Debezium's
-    ts_ms/binlog position), then MERGEs: insert/update upsert, delete
-    removes. Re-applying a batch whose effects are already in the store is
-    a no-op — the idempotence the snapshot→tail handoff relies on.
+    ts_ms/binlog position), then lands the batch as ONE ``TxLog.apply_cdc``
+    commit: insert/update upsert, delete removes. A reader never sees a
+    batch's upserts without its deletes, and a crash leaves either the
+    whole batch or none of it. Re-applying a batch whose effects are
+    already in the table is a no-op — the idempotence the snapshot→tail
+    handoff relies on.
 
     Seq guard (the `WHEN MATCHED AND src.seq >= tgt.seq` of a SQL MERGE):
     when the stored rows carry seq_col, a change older than the stored
@@ -77,14 +79,15 @@ def apply_cdc_changes(
     (``None`` for an empty batch). The reduced per-key frame is cached for
     the duration of the call, so the input lineage (file listing + JSON
     parse for the snapshot phase) evaluates ONCE and the returned floor
-    provably reflects exactly the rows that were merged — callers must
+    provably reflects exactly the rows that were applied — callers must
     never recompute it from the un-materialized input, where a re-resolved
     file listing could include rows that were not part of this apply.
     """
     w = Window.partitionBy(key).orderBy(F.col(seq_col).desc())
     last = changes.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
-    if store.exists(table_name):
-        cur = store.snapshot(table_name)
+    spark = changes.sparkSession
+    if log.state().version >= 0:
+        cur = log.snapshot(spark)
         if seq_col in cur.columns:
             tgt = cur.select(F.col(key), F.col(seq_col).alias("_tgt_seq"))
             last = (
@@ -92,15 +95,13 @@ def apply_cdc_changes(
                 .where(F.col("_tgt_seq").isNull() | (F.col(seq_col) >= F.col("_tgt_seq")))
                 .drop("_tgt_seq")
             )
-    # One materialization serves the floor agg, the upsert, and the delete
-    # (previously each MERGE leg re-ran the whole read/parse/window lineage).
+    # One materialization serves the floor agg and the apply's key
+    # collection, staging and change feed (each would otherwise re-run the
+    # whole read/parse/window lineage).
     last = last.persist()
     try:
         max_seq = last.agg(F.max(seq_col).alias("m")).collect()[0]["m"]
-        ups = last.where(F.col(op_col) != "delete").drop(op_col)
-        dels = last.where(F.col(op_col) == "delete").select(key)
-        store.upsert(table_name, ups, key=key)
-        store.delete(table_name, dels, key=key)
+        log.apply_cdc(spark, last, key, op_col=op_col, delete_ops=("delete",))
     finally:
         last.unpersist()
     return max_seq
@@ -110,8 +111,7 @@ def cdc_initial_load(
     spark: SparkSession,
     cdc_dir: str,
     project: Callable[[DataFrame], DataFrame],
-    store: DimStore,
-    table_name: str,
+    log: TxLog,
     key: str = "id",
     seq_col: str = "seq",
     checkpoint: str | None = None,
@@ -121,7 +121,7 @@ def cdc_initial_load(
     snapshot-backfill then binlog-tail, exactly-once in effect.
 
     1. Snapshot phase: batch-read every envelope file currently in
-       `cdc_dir`, apply via keyed MERGE.
+       `cdc_dir`, apply as one keyed CDC commit to `log`.
     2. Tail phase: a file-source stream over the same directory re-applies
        from the beginning, filtered to seq > the snapshot's max applied
        seq (binlog positions are monotonic per source, so the global floor
@@ -138,15 +138,16 @@ def cdc_initial_load(
     `project` flattens the parsed envelope into (key, ..., seq, op)
     columns — the per-table schema mapping TableProcessFunction keeps in
     config. `on_snapshot_applied` is the hand-off hook (tests inject
-    concurrent writes there). Returns the store version at the boundary.
+    concurrent writes there). Returns the log version at the boundary
+    (-1 when the snapshot phase applied nothing).
     """
     snapshot_raw = spark.read.text(cdc_dir)
     snapshot_changes = project(parse_cdc(snapshot_raw))
     # The floor comes back from the SAME materialized pass that applied the
     # snapshot (cdc_dir is listed + parsed once): it cannot drift from what
     # was actually merged, even if envelope files land during the backfill.
-    seq_floor = apply_cdc_changes(store, table_name, snapshot_changes, key, seq_col=seq_col)
-    boundary = store.current_version(table_name)
+    seq_floor = apply_cdc_changes(log, snapshot_changes, key, seq_col=seq_col)
+    boundary = log.state().version
     if on_snapshot_applied is not None:
         on_snapshot_applied()
 
@@ -154,21 +155,13 @@ def cdc_initial_load(
         changes = project(parse_cdc(b))
         if seq_floor is not None:
             changes = changes.where(F.col(seq_col) > F.lit(seq_floor))
-        apply_cdc_changes(store, table_name, changes, key, seq_col=seq_col)
-
-    from ..session import stream_start_conf
-    from .streams import _note_src_bytes
+        apply_cdc_changes(log, changes, key, seq_col=seq_col)
 
     _note_src_bytes(cdc_dir)
     src = spark.readStream.text(cdc_dir)
-    with stream_start_conf(spark, df=src):
-        q = (
-            src.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", checkpoint or mkscratch(prefix="ckpt_cdc_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
+    start_foreach_batch(
+        src, on_batch, checkpoint or mkscratch(prefix="ckpt_cdc_")
+    ).awaitTermination()
     return boundary
 
 

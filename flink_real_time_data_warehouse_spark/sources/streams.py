@@ -17,6 +17,7 @@ topology lacks.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,9 +27,16 @@ from ..tables import TABLE_NAMES, _nanos_ts_columns
 
 # Source bytes of streams built since the last drain — the sizing input
 # for session.stream_start_conf (stream shuffle/state partitions derive
-# from source volume, guide §2.2). Construction and start are sequential
-# per session, so draining at start sums exactly this query's sources.
-_PENDING_SRC_BYTES: list[int] = []
+# from source volume, guide §2.2). Kept per thread: construction and
+# start are sequential within a thread, so draining at start sums exactly
+# this query's sources even while another thread builds and starts its
+# own query on the same session.
+class _Pending(threading.local):
+    def __init__(self):
+        self.bytes: list[int] = []
+
+
+_PENDING = _Pending()
 
 
 def _note_src_bytes(path: str) -> None:
@@ -43,13 +51,14 @@ def _note_src_bytes(path: str) -> None:
             n = os.path.getsize(path)
     except OSError:
         return
-    _PENDING_SRC_BYTES.append(n)
+    _PENDING.bytes.append(n)
 
 
 def drain_pending_bytes() -> int:
-    """Total source bytes noted since the last drain (then reset)."""
-    total = sum(_PENDING_SRC_BYTES)
-    _PENDING_SRC_BYTES.clear()
+    """Total source bytes this thread noted since its last drain (then
+    reset)."""
+    total = sum(_PENDING.bytes)
+    _PENDING.bytes.clear()
     return total
 
 

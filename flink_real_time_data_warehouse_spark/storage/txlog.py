@@ -1041,9 +1041,8 @@ class TxLog:
         set (removed/DV'd a touched file, added a file whose key range
         intersects, or rewrote the table) raises, and the merge then
         re-derives from fresh state and retries — concurrent mergers
-        serialize without a lock, the multi-writer counterpart of
-        DimStore's single-writer MERGE (sources/dim_store.py; reference
-        DimSinkFunction.java:17-89).
+        serialize without a lock, the multi-writer form of the
+        reference's dim upsert (DimSinkFunction.java:17-89).
 
         Pass `stats_cols=[key]` on every append AND merge to keep the
         file-level pruning effective across the table's life."""

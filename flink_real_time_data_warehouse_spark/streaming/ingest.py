@@ -38,7 +38,7 @@ from ..datapipe.dedup import (
     incremental_dedup_indexed,
 )
 from ..datapipe.quality import text_quality
-from ..session import stream_start_conf
+from ..session import start_foreach_batch
 from ..storage import TxLog
 
 MIN_QUALITY = 2  # same acceptance bar as the graded ingest_pipeline
@@ -107,13 +107,7 @@ def start_ingest(
         finally:
             batch.unpersist()
 
-    with stream_start_conf(stream.sparkSession, df=stream):
-        return (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+    return start_foreach_batch(stream, on_batch, checkpoint)
 
 
 def start_vector_ingest(
@@ -170,13 +164,7 @@ def start_vector_ingest(
         finally:
             batch.unpersist()
 
-    with stream_start_conf(stream.sparkSession, df=stream):
-        return (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+    return start_foreach_batch(stream, on_batch, checkpoint)
 
 
 def start_txlog_sink(stream: DataFrame, log, checkpoint: str, app_id: str = "txsink"):
@@ -192,13 +180,7 @@ def start_txlog_sink(stream: DataFrame, log, checkpoint: str, app_id: str = "txs
     def on_batch(batch: DataFrame, epoch: int) -> None:
         log.append(batch, app_id=app_id, app_version=epoch)
 
-    with stream_start_conf(stream.sparkSession, df=stream):
-        return (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+    return start_foreach_batch(stream, on_batch, checkpoint)
 
 
 def start_cdc_sink(
@@ -224,13 +206,7 @@ def start_cdc_sink(
             app_id=app_id, app_version=epoch,
         )
 
-    with stream_start_conf(stream.sparkSession, df=stream):
-        return (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+    return start_foreach_batch(stream, on_batch, checkpoint)
 
 
 def start_classifier_eval(
@@ -292,13 +268,7 @@ def start_classifier_eval(
         )
         log.append(row, app_id=app_id, app_version=epoch)
 
-    with stream_start_conf(stream.sparkSession, df=stream):
-        return (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+    return start_foreach_batch(stream, on_batch, checkpoint)
 
 
 def start_alignment_gate(
@@ -334,10 +304,4 @@ def start_alignment_gate(
             sample_alignment_gate(batch, emb), app_id=app_id, app_version=epoch
         )
 
-    with stream_start_conf(members.sparkSession, df=members):
-        return (
-            members.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+    return start_foreach_batch(members, on_batch, checkpoint)

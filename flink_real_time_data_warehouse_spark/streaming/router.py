@@ -55,6 +55,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import start_foreach_batch
 from ..storage import TxLog
 
 
@@ -265,15 +266,7 @@ def start_router(
         )
 
     try:
-        from ..session import stream_start_conf
-
-        with stream_start_conf(stream.sparkSession, df=stream):
-            query = (
-                stream.writeStream.foreachBatch(on_batch)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
+        query = start_foreach_batch(stream, on_batch, checkpoint)
     except Exception:
         if lock is not None:
             lock.release()

@@ -1,5 +1,5 @@
 """End-to-end BaseDBApp path (SURVEY §3.2): CDC envelope -> parse/normalize
--> delete filter -> config-driven routing -> fact sink + dim store MERGE."""
+-> delete filter -> config-driven routing -> fact sink + dim table MERGE."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ from flink_real_time_data_warehouse_spark.sources.cdc import (
     parse_cdc,
     simulate_cdc_batch,
 )
-from flink_real_time_data_warehouse_spark.sources.dim_store import DimStore
+from flink_real_time_data_warehouse_spark.storage import TxLog
 from flink_real_time_data_warehouse_spark.streaming.router import (
     RouteConfig,
     read_sink,
@@ -82,22 +82,41 @@ def test_apply_cdc_changes_seq_guard_blocks_stale_writes(spark, tmp_path):
     stale upserts and stale deletes instead of regressing the key."""
     from flink_real_time_data_warehouse_spark.sources.cdc import apply_cdc_changes
 
-    store = DimStore(spark, str(tmp_path / "dims"))
+    log = TxLog(str(tmp_path / "dims" / "t"))
     fresh = spark.createDataFrame([(1, "v1-new", 20, "insert"), (2, "v2", 21, "insert")],
                                   "id long, val string, seq long, op string")
-    apply_cdc_changes(store, "t", fresh)
+    apply_cdc_changes(log, fresh)
     # stale update of key 1, stale delete of key 2 (both seq < stored seq)
     stale = spark.createDataFrame([(1, "v1-old", 10, "update"), (2, "v2", 11, "delete")],
                                   "id long, val string, seq long, op string")
-    apply_cdc_changes(store, "t", stale)
-    state = {r["id"]: (r["val"], r["seq"]) for r in store.snapshot("t").collect()}
+    apply_cdc_changes(log, stale)
+    state = {r["id"]: (r["val"], r["seq"]) for r in log.snapshot(spark).collect()}
     assert state == {1: ("v1-new", 20), 2: ("v2", 21)}
     # a genuinely newer change still applies
     newer = spark.createDataFrame([(1, "v1-newer", 30, "update"), (2, "v2", 31, "delete")],
                                   "id long, val string, seq long, op string")
-    apply_cdc_changes(store, "t", newer)
-    state = {r["id"]: r["val"] for r in store.snapshot("t").collect()}
+    apply_cdc_changes(log, newer)
+    state = {r["id"]: r["val"] for r in log.snapshot(spark).collect()}
     assert state == {1: "v1-newer"}
+
+
+def test_apply_cdc_changes_is_one_commit(spark, tmp_path):
+    """A batch with both upserts and deletes advances the dim log by
+    exactly one version: no reader can see the upserts without the
+    deletes."""
+    from flink_real_time_data_warehouse_spark.sources.cdc import apply_cdc_changes
+
+    log = TxLog(str(tmp_path / "dims" / "t"))
+    schema = "id long, val string, seq long, op string"
+    apply_cdc_changes(log, spark.createDataFrame(
+        [(1, "a", 1, "insert"), (2, "b", 2, "insert"), (3, "c", 3, "insert")], schema))
+    v = log.state().version
+    max_seq = apply_cdc_changes(log, spark.createDataFrame(
+        [(1, "a2", 4, "update"), (2, "b", 5, "delete"), (4, "d", 6, "insert")], schema))
+    assert max_seq == 6
+    assert log.state().version == v + 1
+    state = {r["id"]: r["val"] for r in log.snapshot(spark).collect()}
+    assert state == {1: "a2", 3: "c", 4: "d"}
 
 
 def test_route_interleaved_epoch_replays_exactly_once(spark, tmp_path):
@@ -286,15 +305,15 @@ def test_cdc_initial_snapshot_then_tail(spark, tmp_path):
             "\n".join([_envelope("create", 6, "v6", 30), _envelope("update", 1, "v1b", 31)])
         )
 
-    store = DimStore(spark, str(tmp_path / "dims"))
+    log = TxLog(str(tmp_path / "dims" / "order_info"))
     boundary = cdc_initial_load(
-        spark, str(binlog), project, store, "order_info",
+        spark, str(binlog), project, log,
         checkpoint=str(tmp_path / "ckpt"),
         on_snapshot_applied=during_backfill,
     )
-    assert boundary is not None
+    assert boundary == 0  # the snapshot phase is one commit
 
-    snap = {r["id"]: r["val"] for r in store.snapshot("order_info").collect()}
+    snap = {r["id"]: r["val"] for r in log.snapshot(spark).collect()}
     # exactly-once in effect: 3 deleted, 1+2 updated, 6 inserted mid-backfill
     assert snap == {1: "v1b", 2: "v2b", 4: "v4", 5: "v5", 6: "v6"}
-    assert store.snapshot("order_info").count() == 5  # no duplicate rows
+    assert log.snapshot(spark).count() == 5  # no duplicate rows

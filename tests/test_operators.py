@@ -1,7 +1,9 @@
-"""Unit tests for operator modules: dim store MERGE semantics, dirty-JSON
+"""Unit tests for operator modules: dim table MERGE semantics, dirty-JSON
 split, skew-salted join, serving API, multimodal plumbing."""
 
 from __future__ import annotations
+
+import threading
 
 import pytest
 from pyspark.sql import Row
@@ -12,36 +14,40 @@ from flink_real_time_data_warehouse_spark.datapipe.multimodal import (
     assets_from_documents,
     decode_assets,
 )
+from flink_real_time_data_warehouse_spark.operators.joins import dim_enrich
 from flink_real_time_data_warehouse_spark.operators.skew import salted_join
 from flink_real_time_data_warehouse_spark.operators.split import parse_json_logs
 from flink_real_time_data_warehouse_spark.serving import ServingAPI
-from flink_real_time_data_warehouse_spark.sources.dim_store import DimStore
+from flink_real_time_data_warehouse_spark.storage import TxLog
 from flink_real_time_data_warehouse_spark.tables import table
 
 from .conftest import TEST_SF_DIR
 
 
 def test_dim_store_merge_upsert(spark, tmp_path):
-    store = DimStore(spark, str(tmp_path))
-    v0 = store.upsert("user_info", spark.createDataFrame(
-        [Row(id=1, name="a"), Row(id=2, name="b")]))
-    assert v0 == 0 and store.exists("user_info")
+    log = TxLog(str(tmp_path / "user_info"))
+    assert log.state().version == -1
+    v0 = log.merge(spark, spark.createDataFrame(
+        [Row(id=1, name="a"), Row(id=2, name="b")]), key="id")
+    assert v0 == 0 and log.state().version == 0  # first commit creates the table
     # update id=2, insert id=3 (K3 upsert + dynamic creation already done)
-    v1 = store.upsert("user_info", spark.createDataFrame(
-        [Row(id=2, name="b2"), Row(id=3, name="c")]))
+    v1 = log.merge(spark, spark.createDataFrame(
+        [Row(id=2, name="b2"), Row(id=3, name="c")]), key="id")
     assert v1 == 1
-    snap = {r["id"]: r["name"] for r in store.snapshot("user_info").collect()}
+    snap = {r["id"]: r["name"] for r in log.snapshot(spark).collect()}
     assert snap == {1: "a", 2: "b2", 3: "c"}
     # J5 "cache invalidation": next snapshot read simply sees the new value
-    store.delete("user_info", spark.createDataFrame([Row(id=1)]))
-    assert {r["id"] for r in store.snapshot("user_info").collect()} == {2, 3}
+    log.delete(spark, "id", 1, 1)
+    assert {r["id"] for r in log.snapshot(spark).collect()} == {2, 3}
 
 
 def test_dim_store_enrich_join(spark, tmp_path):
-    store = DimStore(spark, str(tmp_path))
-    store.upsert("sku", spark.createDataFrame([Row(id=1, sku_name="x"), Row(id=2, sku_name="y")]))
+    log = TxLog(str(tmp_path / "sku"))
+    log.merge(spark, spark.createDataFrame(
+        [Row(id=1, sku_name="x"), Row(id=2, sku_name="y")]), key="id")
     fact = spark.createDataFrame([Row(sku_id=1, qty=5), Row(sku_id=9, qty=7)])
-    out = store.enrich(fact, "sku", F.col("sku_id"), ["sku_name"])
+    dim = log.snapshot(spark)
+    out = dim_enrich(fact, [(dim, fact["sku_id"] == dim["id"], ["id", "sku_name"])], how="left")
     rows = {r["sku_id"]: r["sku_name"] for r in out.collect()}
     assert rows == {1: "x", 9: None}  # left join: missing dim -> null, row kept
 
@@ -74,6 +80,7 @@ def test_salted_join_equals_plain_join(spark):
 
 def test_serving_api_gmv(spark, tmp_path):
     api = ServingAPI(spark, TEST_SF_DIR, store_dir=str(tmp_path / "store"))
+    api.materialize()
     resp = api.gmv("2024-01-05")
     assert resp["status"] == 0 and resp["data"] > 0
     assert api.gmv("1999-01-01")["data"] == 0.0  # no data day -> 0, like reference default path
@@ -89,6 +96,45 @@ def test_serving_api_gmv(spark, tmp_path):
     files = api.result_table("gmv_daily").inputFiles()
     assert files and all("testdata" not in f for f in files)
     assert all(str(tmp_path) in f for f in files)
+
+
+def test_serving_reads_never_refresh(spark, tmp_path):
+    """A read of a store that was never materialized raises the log's
+    error instead of refreshing it, and writes nothing."""
+    api = ServingAPI(spark, TEST_SF_DIR, store_dir=str(tmp_path / "store"))
+    with pytest.raises(ValueError, match="has no commits"):
+        api.gmv("2024-01-05")
+    assert all(log.state().version == -1 for log in api.logs.values())
+
+
+def test_serving_reads_beside_refreshes(spark, tmp_path):
+    """Reads that overlap materialize() see the previous committed refresh
+    whole: no read raises and every answer equals the answer before."""
+    api = ServingAPI(spark, TEST_SF_DIR, store_dir=str(tmp_path / "store"))
+    api.materialize()
+    want = (api.gmv("2024-01-05"), api.trademark_revenue(5))
+    stop = threading.Event()
+    errors, answers = [], []
+
+    def reader():
+        while not stop.is_set():
+            try:
+                answers.append((api.gmv("2024-01-05"), api.trademark_revenue(5)))
+            except Exception as e:  # recorded, asserted below
+                errors.append(repr(e))
+
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        for _ in range(5):
+            api.materialize()
+    finally:
+        stop.set()
+        t.join(timeout=120)
+    assert not t.is_alive()
+    assert errors == []
+    assert answers and all(a == want for a in answers)
+    assert api.logs["gmv_daily"].state().version == 5
 
 
 def test_text_quality_zero_token_doc(spark):
@@ -380,6 +426,24 @@ def test_containment_catches_quotes_jaccard_misses(spark):
     assert r["cont_b"] < 0.2  # ...but covers little of the long doc
     jac = ngram_jaccard_pairs(docs, "doc_id", "text", 0.3, doc_freq_cap=None).collect()
     assert jac == []  # symmetric Jaccard misses the quote entirely
+
+
+@pytest.mark.parametrize("fn", ["ngram_jaccard_pairs", "containment_pairs"])
+def test_capped_pair_builders_leave_one_block_set(spark, fn):
+    """With a doc-frequency cap, the uncapped shingle rows are released
+    once the capped frame is checkpointed: one call leaves at most one
+    persisted RDD behind (the capped checkpoint), not two."""
+    from flink_real_time_data_warehouse_spark.datapipe import dedup
+
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox jumps over the lazy dog number {i % 3}") for i in range(12)],
+        "doc_id long, text string",
+    )
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = rdds().size()
+    pairs = getattr(dedup, fn)(docs, "doc_id", "text", 0.5, doc_freq_cap=5)
+    assert pairs.count() > 0
+    assert rdds().size() - before <= 1
 
 
 def test_media_header_codec_boundary_dims(spark):

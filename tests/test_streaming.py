@@ -8,6 +8,7 @@ boundaries and event-time timers fire on watermark progress."""
 from __future__ import annotations
 
 import tempfile
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,7 +19,14 @@ from flink_real_time_data_warehouse_spark.operators.stateful_batch import (
     bounce_events,
     daily_first_visit,
 )
-from flink_real_time_data_warehouse_spark.sources.streams import replay_splits, stream_dir
+from flink_real_time_data_warehouse_spark.sources.streams import (
+    drain_pending_bytes,
+    replay_splits,
+    stream_dir,
+    stream_table,
+)
+from flink_real_time_data_warehouse_spark.storage import TxLog
+from flink_real_time_data_warehouse_spark.streaming.ingest import start_txlog_sink
 from flink_real_time_data_warehouse_spark.streaming.pipelines import (
     interval_join_stream,
     log_split,
@@ -676,3 +684,35 @@ def test_tws_registry_gate_behavior():
     tws = {"bounce_stream_tws", "uv_stream_tws", "new_user_tws"}
     assert (tws <= names) == _tws_available()
     assert _tws_available() or not (tws & names)
+
+
+def test_concurrent_stream_starts_restore_session_conf(spark, tmp_path):
+    """Two threads build and start availableNow queries on one session, as
+    a router and a DWS leg do: each start sizes its own shuffle partitions
+    from its own sources, and the session's value afterwards equals its
+    value before, however the starts interleave."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    drain_pending_bytes()  # this thread's notes from earlier tests
+    n_orders = table(spark, TEST_SF_DIR, "orders").count()
+    errors = []
+
+    def leg(k: int) -> None:
+        try:
+            for i in range(3):
+                log = TxLog(str(tmp_path / f"sink_{k}_{i}"))
+                q = start_txlog_sink(stream_table(spark, TEST_SF_DIR, "orders"), log,
+                                     str(tmp_path / f"ck_{k}_{i}"), app_id=f"leg{k}")
+                q.awaitTermination()
+                assert log.snapshot(spark).count() == n_orders
+        except Exception as e:  # recorded, asserted below
+            errors.append(repr(e))
+
+    threads = [threading.Thread(target=leg, args=(k,)) for k in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert drain_pending_bytes() == 0  # the legs' sources stay in their threads
