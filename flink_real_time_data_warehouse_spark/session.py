@@ -54,16 +54,16 @@ _RUNTIME_CONF = {
 # Size shuffles to the machine instead of the 200-partition default — AQE
 # coalesces down but won't split up; runtime-settable, applied even to
 # caller-owned sessions (the grading driver's vanilla session). Kept OUT of
-# _RUNTIME_CONF so it only replaces the stock default: an explicit caller
-# choice (get_spark(shuffle_partitions=...), the test session's data-sized
-# 4, a spark-submit setting on a cluster) must not be clobbered by the next
+# _RUNTIME_CONF so it only fills in a value the session never set: an
+# explicit caller choice (get_spark(shuffle_partitions=...), the test
+# session's data-sized 4, a spark-submit setting on a cluster — even one
+# that equals the stock 200) must not be clobbered by the next
 # tune_session() call.
-_DEFAULT_SHUFFLE_PARTITIONS = "200"  # Spark's stock default
-
-
 def _size_shuffle_partitions(spark: SparkSession) -> None:
     try:
-        if spark.conf.get("spark.sql.shuffle.partitions") == _DEFAULT_SHUFFLE_PARTITIONS:
+        if not spark._jsparkSession.sessionState().conf().contains(
+            "spark.sql.shuffle.partitions"
+        ):
             spark.conf.set("spark.sql.shuffle.partitions", str(os.cpu_count() or 8))
     except Exception:
         pass

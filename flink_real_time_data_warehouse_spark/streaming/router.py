@@ -31,12 +31,10 @@ DimSinkFunction.java:17-89):
   hand-rolled epoch-marker sink refused a second writer by construction;
   that whole protocol is deleted in favor of the log.)
 
-:class:`RouterLock` remains as an OPTIONAL advisory guard
-(`start_router(advisory_lock=True)`): correctness never needs it, but a
-deployment that wants a duplicate accidental router to fail FAST — rather
-than double-append rows under a second app_id — can keep the
-single-owner fence. It is also the mutation fence for the non-TxLog
-SignatureIndex (datapipe/signature_index.py).
+:class:`RouterLock` is a single-owner advisory fence on a directory. The
+router itself never takes it (correctness never needs it); it is the
+mutation fence of the non-TxLog SignatureIndex
+(datapipe/signature_index.py).
 
 The routing loop is per *config entry*, not per record — each iteration is
 one declarative filter+project+write that Catalyst optimizes; with N
@@ -65,13 +63,10 @@ class SinkLockError(RuntimeError):
 
 
 class RouterLock:
-    """Optional single-writer advisory guard for a router sink tree.
+    """Single-writer advisory guard for a directory tree.
 
-    With TxLog as the commit layer this is no longer required for
-    correctness (concurrent writers serialize through the log); it exists
-    for deployments that want an ACCIDENTAL second router to fail fast
-    instead of doubling every append under its own app_id, and as the
-    mutation fence of the marker-based SignatureIndex.
+    TxLog sinks never need it (concurrent writers serialize through the
+    log); it is the mutation fence of the marker-based SignatureIndex.
 
     An owner file (`_router_lock`, JSON `{pid, token}`) is created before
     the first epoch; a second acquirer finds it, sees a live owner pid,
@@ -241,7 +236,6 @@ def start_router(
     base_dir: str,
     checkpoint: str,
     app_id: str = "router",
-    advisory_lock: bool = False,
 ):
     """Attach the router to a streaming DataFrame.
 
@@ -251,51 +245,11 @@ def start_router(
     Spark hands foreachBatch keys each sink's idempotent TxLog commit.
 
     Multi-writer: routers with DISTINCT `app_id`s may share sink tables;
-    the log serializes their commits. `advisory_lock=True` restores the
-    fail-fast single-owner guard (a second concurrent router raises
-    :class:`SinkLockError` immediately) for deployments where a duplicate
-    router is always a mistake. Returns a :class:`RouterHandle` proxying
-    the StreamingQuery; `awaitTermination`/`stop` release the lock."""
-    lock = RouterLock(base_dir).acquire() if advisory_lock else None
+    the log serializes their commits. Returns the StreamingQuery."""
 
     def on_batch(batch: DataFrame, epoch: int) -> None:
-        if lock is not None:
-            lock.check()  # fence: refuse to write epochs after losing ownership
         route_micro_batch(
             batch, list(config_provider()), base_dir, epoch_id=epoch, app_id=app_id
         )
 
-    try:
-        query = start_foreach_batch(stream, on_batch, checkpoint)
-    except Exception:
-        if lock is not None:
-            lock.release()
-        raise
-    return RouterHandle(query, lock)
-
-
-class RouterHandle:
-    """StreamingQuery proxy that releases the sink's RouterLock (if any)
-    when the query finishes (awaitTermination) or is stopped."""
-
-    def __init__(self, query, lock: RouterLock | None):
-        self.query = query
-        self.lock = lock
-
-    def awaitTermination(self, timeout: float | None = None):  # noqa: N802 (Spark API casing)
-        try:
-            return self.query.awaitTermination(timeout) if timeout is not None \
-                else self.query.awaitTermination()
-        finally:
-            if self.lock is not None and not self.query.isActive:
-                self.lock.release()
-
-    def stop(self) -> None:
-        try:
-            self.query.stop()
-        finally:
-            if self.lock is not None:
-                self.lock.release()
-
-    def __getattr__(self, name):
-        return getattr(self.query, name)
+    return start_foreach_batch(stream, on_batch, checkpoint)

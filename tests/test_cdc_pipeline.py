@@ -211,58 +211,6 @@ def test_router_lock_steals_stale_and_fences(tmp_path):
     b.release()
 
 
-def test_start_router_lock_lifecycle(spark, tmp_path):
-    """With advisory_lock=True, start_router refuses a concurrently-owned
-    sink fast (the fail-fast guard; TxLog makes it optional), and releases
-    the lock when the query terminates so a sequential restart works."""
-    import os
-
-    import pandas as pd
-    import pytest
-
-    from flink_real_time_data_warehouse_spark.streaming.router import (
-        RouterLock,
-        SinkLockError,
-        start_router,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    pd.DataFrame(
-        {"source_table": ["order_info"] * 4, "op": ["insert"] * 4,
-         "id": [1, 2, 3, 4], "total_amount": [10.0, 20.0, 30.0, 40.0]}
-    ).to_parquet(str(src / "b0.parquet"))
-    schema = "source_table STRING, op STRING, id LONG, total_amount DOUBLE"
-    configs = [RouteConfig("order_info", "insert", "dwd_order_info", ("id", "total_amount"))]
-    sinks = str(tmp_path / "sinks")
-
-    def make_stream():
-        return spark.readStream.format("parquet").schema(schema).load(str(src))
-
-    held = RouterLock(sinks).acquire()  # another live router owns the sink
-    with pytest.raises(SinkLockError, match="live router"):
-        start_router(
-            make_stream(), lambda: configs, sinks, str(tmp_path / "ckpt0"),
-            advisory_lock=True,
-        )
-    held.release()
-
-    h = start_router(
-        make_stream(), lambda: configs, sinks, str(tmp_path / "ckpt1"),
-        advisory_lock=True,
-    )
-    h.awaitTermination()
-    assert not os.path.exists(os.path.join(sinks, RouterLock.FILENAME))  # released
-    assert read_sink(spark, sinks, "dwd_order_info").count() == 4
-    # sequential restart (new checkpoint -> epoch replays) re-acquires fine
-    h2 = start_router(
-        make_stream(), lambda: configs, sinks, str(tmp_path / "ckpt2"),
-        advisory_lock=True,
-    )
-    h2.awaitTermination()
-    assert not os.path.exists(os.path.join(sinks, RouterLock.FILENAME))
-
-
 def _envelope(op: str, _id: int, val: str, seq: int) -> str:
     import json
 

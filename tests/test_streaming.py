@@ -716,3 +716,17 @@ def test_concurrent_stream_starts_restore_session_conf(spark, tmp_path):
     assert errors == []
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert drain_pending_bytes() == 0  # the legs' sources stay in their threads
+
+
+def test_tune_session_keeps_explicit_stock_shuffle_partitions(spark):
+    """An explicit spark.sql.shuffle.partitions=200 is a caller's choice,
+    not the unset stock default: tune_session must leave it alone."""
+    from flink_real_time_data_warehouse_spark.session import tune_session
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "200")
+        tune_session(spark)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
