@@ -6,7 +6,7 @@ transform code serves both, which is the core idiom the per-JVM Flink
 topology lacks.
 
 - stream_table: the fixture parquet as a Structured Streaming source
-  (schema from the batch footer, same nanos->micros normalization as
+  (schema from the parquet footer, same nanos->micros conversion as
   tables.table, so batch and stream rows are byte-identical).
 - replay_splits: test utility — split a fixture into N files so
   maxFilesPerTrigger drives true multi-micro-batch incremental execution.
@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import tune_session
-from ..tables import TABLE_NAMES, _nanos_ts_columns
+from ..tables import TABLE_NAMES, footer_schema, nanos_to_micros
 
 # Source bytes of streams built since the last drain — the sizing input
 # for session.stream_start_conf (stream shuffle/state partitions derive
@@ -73,7 +73,7 @@ def stream_table(
         raise KeyError(f"unknown table {name!r}")
     tune_session(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = spark.read.parquet(path).schema  # footer-only; nanos cols are long here
+    schema, nanos = footer_schema(path)
     reader = (
         spark.readStream.format("parquet")
         .schema(schema)
@@ -82,10 +82,7 @@ def stream_table(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     _note_src_bytes(path)
-    df = reader.load(sf_dir)
-    for c in _nanos_ts_columns(path):
-        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    return df
+    return nanos_to_micros(reader.load(sf_dir), nanos)
 
 
 def stream_dir(

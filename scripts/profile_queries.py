@@ -1,25 +1,34 @@
 #!/usr/bin/env python3
-"""Round-13 optimization helper: time a SUBSET of registered queries with
-the exact bench.py methodology (noop sink, min-of-reps, warmup) so a
-single query can be iterated on without paying the full 232-query sweep.
+"""Time a subset of registered queries, split into build and execute, so
+one query can be iterated on without a full sweep.
+
+Per query and rep, three figures:
+  build  seconds to build the DataFrame (``registry()[name].spark(...)``,
+         no action) and the Spark jobs that build ran;
+  exec   seconds to run the built plan through the ``noop`` sink (the
+         whole plan executes, nothing is collected) and its Spark jobs.
+Jobs are counted per phase with a job group, so a plan whose build runs a
+job (schema inference, an eager checkpoint, a collect) shows it. The
+reported seconds are the min over reps, after one warmup query.
 
 Usage:
   python scripts/profile_queries.py name [name ...]
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_BENCH_REPS=3 \
-      python scripts/profile_queries.py line_dedup
+      python scripts/profile_queries.py order_wide province_stats
 
 Also dumps the formatted plan when --plans DIR is given:
-  python scripts/profile_queries.py --plans plans/r13 --suffix before line_dedup
-(writes plans/r13/line_dedup_before.txt).
+  python scripts/profile_queries.py --plans /tmp/plans --suffix before order_wide
+(writes /tmp/plans/order_wide_before.txt).
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_real_time_data_warehouse_spark.queries import registry  # noqa: E402
 from flink_real_time_data_warehouse_spark.session import get_spark  # noqa: E402
@@ -50,13 +59,30 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
     spark = get_spark("frtdw-profile")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     qs = registry()
+    groups = itertools.count()
 
-    def run(name: str) -> float:
-        t0 = time.perf_counter()
-        qs[name].spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
+    def timed(fn):
+        """(result, seconds, Spark jobs) of fn() under a fresh job group."""
+        group = f"profile:{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            t0 = time.perf_counter()
+            out = fn()
+            secs = time.perf_counter() - t0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        return out, secs, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def run(name: str) -> tuple[float, int, float, int]:
+        df, build_s, build_jobs = timed(lambda: qs[name].spark(spark, sf_dir))
+        _, exec_s, exec_jobs = timed(
+            lambda: df.write.format("noop").mode("overwrite").save()
+        )
+        return build_s, build_jobs, exec_s, exec_jobs
 
     run("q1_pricing_summary")  # warmup
     for name in names:
@@ -67,10 +93,15 @@ def main() -> None:
             os.makedirs(plans_dir, exist_ok=True)
             with open(os.path.join(plans_dir, f"{name}_{suffix}.txt"), "w") as f:
                 f.write(fmt_plan(qs[name].spark(spark, sf_dir)) + "\n")
-        spark.sparkContext.setJobDescription(f"profile:{name}")
-        ts = [run(name) for _ in range(reps)]
-        spark.sparkContext.setJobDescription(None)
-        print(f"{name}: min={min(ts)} runs={ts}", flush=True)
+        rs = [run(name) for _ in range(reps)]
+        build_s = min(r[0] for r in rs)
+        exec_s = min(r[2] for r in rs)
+        print(
+            f"{name}: build={build_s:.3f}s jobs={rs[-1][1]}"
+            f"  exec={exec_s:.3f}s jobs={rs[-1][3]}"
+            f"  total={build_s + exec_s:.3f}s",
+            flush=True,
+        )
 
 
 if __name__ == "__main__":

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from flink_real_time_data_warehouse_spark.operators.bucketing import bucketed, write_bucketed
 from flink_real_time_data_warehouse_spark.queries import registry
+from flink_real_time_data_warehouse_spark.sources.streams import drain_pending_bytes, stream_table
 from flink_real_time_data_warehouse_spark.tables import table
 
 from .conftest import TEST_SF_DIR
@@ -85,6 +86,39 @@ def test_column_pruning_reaches_scan(spark):
     read_schema = plan.split("ReadSchema: ")[1].splitlines()[0]
     assert "event_type" in read_schema and "value" in read_schema
     assert "props" not in read_schema and "event_id" not in read_schema
+
+
+DWS_BATCH = (
+    "order_wide", "payment_wide", "product_stats", "province_stats",
+    "visitor_stats", "keyword_stats", "uv_daily", "bounce_events",
+    "session_stats", "serving_gmv",
+)
+
+
+def jobs_run_by(spark, group, build):
+    """Ids of the Spark jobs ``build()`` ran on this thread."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", DWS_BATCH)
+def test_building_dws_plan_runs_no_job(spark, name):
+    """Building a DWS plan runs no Spark job: table() passes the footer
+    schema, so no schema-inference job runs before the plan executes."""
+    jobs = jobs_run_by(spark, f"build:{name}", lambda: registry()[name].spark(spark, TEST_SF_DIR))
+    assert jobs == [], f"{name}: building the plan ran {len(jobs)} Spark job(s)"
+
+
+def test_building_stream_table_runs_no_job(spark):
+    jobs = jobs_run_by(spark, "build:stream_table", lambda: stream_table(spark, TEST_SF_DIR, "events"))
+    drain_pending_bytes()  # the source noted its bytes for a start that never comes
+    assert jobs == [], f"stream_table ran {len(jobs)} Spark job(s)"
 
 
 def test_bucketed_join_has_no_exchange(spark):
