@@ -76,11 +76,14 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import threading
 import time
 import uuid
+from bisect import bisect_left
 from dataclasses import dataclass, field
+from functools import cache, cached_property, reduce
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -325,6 +328,11 @@ def _bloom_might_contain(bloom: dict, v) -> bool:
     return True
 
 
+def _in_range(lo, hi):
+    """``overlaps(mn, mx)`` of the key range [lo, hi]."""
+    return lambda mn, mx: mn <= hi and mx >= lo
+
+
 @dataclass(frozen=True)
 class _State:
     version: int  # -1 => empty table, no commits yet
@@ -350,8 +358,15 @@ class _State:
     # TABLE PROPERTIES (Delta's TBLPROPERTIES): name -> value, latest
     # full map wins (set_property commits a metadata-only manifest).
     # Behavior keys: "enableChangeDataFeed" = "true" makes
-    # update/delete/delete_to_dv/merge stage typed CDF sidecars.
+    # update/delete/delete_to_dv/merge/merge_into stage typed CDF sidecars.
     props: dict = field(default_factory=dict)
+
+    @cached_property
+    def schema(self) -> StructType | None:
+        """`schema_json` parsed, once per state."""
+        if self.schema_json is None:
+            return None
+        return StructType.fromJson(json.loads(self.schema_json))
 
 
 class TxLog:
@@ -534,7 +549,10 @@ class TxLog:
         disjoint writers stop serializing behind each other. Any False
         (or unreadable manifest) falls back to TxConflictError and the
         caller's re-derive loop. (Delta VLDB-2020 §3.2, the
-        WriteSerializable conflict check.)
+        WriteSerializable conflict check.) A commit carrying
+        `properties` (e.g. an advanced identity watermark) is never
+        re-targeted past a manifest that also carries them: the map is
+        latest-wins, so committing ours would revert the winner's.
         """
         staged_all = (
             list(adds) + list(cdf or []) + sorted(set((dvs or {}).values()))
@@ -562,7 +580,10 @@ class TxLog:
                             except FileNotFoundError:
                                 benign = False
                                 break
-                            if not conflict_ok(m):
+                            if not conflict_ok(m) or (
+                                properties is not None
+                                and m.get("properties") is not None
+                            ):
                                 benign = False
                                 break
                     if benign:
@@ -619,6 +640,84 @@ class TxLog:
                 os.remove(os.path.join(self.data_path, n))
             except FileNotFoundError:
                 pass
+
+    # -- the read-modify-write core ------------------------------------
+
+    def _occ(self, op: str, max_retries: int, attempt) -> int:
+        """The OCC re-derive loop every read-modify-write verb runs:
+        ``attempt(state)`` derives its output from a fresh state and
+        commits it with ``expected_version`` (plus its benign-manifest
+        predicate); a :class:`TxConflictError` — a lost race the commit
+        could not re-validate as benign — re-derives from the new state.
+        Returns the attempt's version."""
+        for _ in range(max_retries):
+            try:
+                return attempt(self.state())
+            except TxConflictError:
+                continue
+        raise TxConflictError(f"{op} lost {max_retries} consecutive OCC races")
+
+    def _key_probe(self, keyed: DataFrame, key: str):
+        """``(key_rows, overlaps)`` for the keyed verbs (merge,
+        merge_into, apply_cdc, apply_scd2): the distinct non-null keys of
+        `keyed`, and ``overlaps(mn, mx)`` — whether a file whose recorded
+        key range is [mn, mx] can hold one of them. Up to `_CDC_KEYS_MAX`
+        keys are collected sorted and each range is probed by binary
+        search, so a batch touching low and high keys does not rewrite
+        every file between (a change batch is bounded by ingest rate,
+        so the collect is small by construction). Beyond the cap the
+        probe degrades to the keys' true [min, max]. ``overlaps`` is
+        None when `keyed` holds no non-null key."""
+        key_rows = keyed.where(F.col(key).isNotNull()).select(key).distinct()
+        keys = sorted(r[0] for r in key_rows.limit(self._CDC_KEYS_MAX + 1).collect())
+        if not keys:
+            return key_rows, None
+        if len(keys) > self._CDC_KEYS_MAX:
+            # the collected keys are an arbitrary subset: bound the whole set
+            return key_rows, _in_range(*key_rows.agg(F.min(key), F.max(key)).first())
+
+        def overlaps(mn, mx) -> bool:
+            i = bisect_left(keys, mn)
+            return i < len(keys) and keys[i] <= mx
+
+        return key_rows, overlaps
+
+    @staticmethod
+    def _classify(st: _State, key: str, overlaps, covers=None) -> tuple[list, list]:
+        """Split the live files by their recorded `key` [min, max]:
+        files ``overlaps(mn, mx)`` rules out are untouched (in neither
+        list); files ``covers(mn, mx)`` proves wholly matched go to
+        `drop` (a metadata-only removal); the rest, and every file
+        without `key` stats, go to `touched`. Returns (drop, touched)."""
+        pkey = st.cmap.get(key, key)  # stats are keyed by physical name
+        drop: list[str] = []
+        touched: list[str] = []
+        for n in st.files:
+            mm = st.stats.get(n, {}).get(pkey)
+            if mm is not None and not overlaps(mm[0], mm[1]):
+                continue
+            if mm is not None and covers is not None and covers(mm[0], mm[1]):
+                drop.append(n)
+            else:
+                touched.append(n)
+        return drop, touched
+
+    @staticmethod
+    def _range_pred(key: str, lo, hi, condition) -> F.Column:
+        """`key` in [lo, hi], AND `condition` (a Column or SQL string)."""
+        pred = F.col(key).between(F.lit(lo), F.lit(hi))
+        if condition is not None:
+            pred = pred & (F.expr(condition) if isinstance(condition, str) else condition)
+        return pred
+
+    @staticmethod
+    def _refuse_identity(df: DataFrame, id_specs: dict, what: str) -> None:
+        for c in id_specs:
+            if c in df.columns:
+                raise ValueError(
+                    f"identity column {c!r} is GENERATED ALWAYS: {what} "
+                    "must not supply it"
+                )
 
     # -- DataFrame API -------------------------------------------------
 
@@ -760,10 +859,11 @@ class TxLog:
         :meth:`add_identity_column`)."""
         # Idempotence fast path: skip the stage write entirely on replay.
         if app_id is not None and app_version is not None:
-            if self.state().apps.get(app_id, -1) >= app_version:
-                return self.state().version
-        for _ in range(max_retries):
             st = self.state()
+            if st.apps.get(app_id, -1) >= app_version:
+                return st.version
+
+        def attempt(st: _State) -> int:
             self._check_logical_names(df, st)
             out, props = self._apply_identity(df, st.props, identity_order_by)
             out = self._apply_generated(out)
@@ -771,42 +871,22 @@ class TxLog:
             names, schema_json, stats, parts = self._stage(
                 out, stats_cols, partition_by, bloom_cols, cmap=st.cmap
             )
-            if props is None:
-                try:
-                    # Plain appends conflict with nothing EXCEPT an
-                    # intervening rename/drop (ADVICE r7): the staged files
-                    # and schema_json carry the logical names and cmap AT
-                    # DERIVE TIME, and replay is latest-schema-wins, so
-                    # committing them past a rename would revert it (and
-                    # write the wrong physical names). Re-derive: the fresh
-                    # cmap restages correctly.
-                    return self.commit_files(
-                        names, "append", schema_json, app_id=app_id,
-                        app_version=app_version, stats=stats, parts=parts,
-                        expected_version=st.version,
-                        conflict_ok=lambda m: m.get("column_mapping") is None,
-                    )
-                except TxConflictError:
-                    continue
-            try:
-                # Identity appends serialize on the watermark: the commit
-                # carries the advanced mark in its properties, so any
-                # intervening properties-carrying commit (another identity
-                # append, a SET TBLPROPERTIES) forces a re-derive — as does
-                # a rename/drop, same as the plain path; commits that leave
-                # both alone are benign.
-                return self.commit_files(
-                    names, "append", schema_json, app_id=app_id,
-                    app_version=app_version, stats=stats, parts=parts,
-                    properties=props, expected_version=st.version,
-                    conflict_ok=lambda m: m.get("properties") is None
-                    and m.get("column_mapping") is None,
-                )
-            except TxConflictError:
-                continue
-        raise TxConflictError(
-            f"append lost {max_retries} consecutive OCC races"
-        )
+            # Appends conflict with nothing EXCEPT an intervening
+            # rename/drop (ADVICE r7): the staged files and schema_json
+            # carry the logical names and cmap AT DERIVE TIME, and replay
+            # is latest-schema-wins, so committing them past a rename
+            # would revert it (and write the wrong physical names).
+            # Re-derive: the fresh cmap restages correctly. Identity
+            # appends also serialize on the watermark their properties
+            # carry (commit_files' properties rule).
+            return self.commit_files(
+                names, "append", schema_json, app_id=app_id,
+                app_version=app_version, stats=stats, parts=parts,
+                properties=props, expected_version=st.version,
+                conflict_ok=lambda m: m.get("column_mapping") is None,
+            )
+
+        return self._occ("append", max_retries, attempt)
 
     def overwrite(
         self,
@@ -866,6 +946,7 @@ class TxLog:
         files: list[str],
         st: _State,
         merge_schema: bool = False,
+        positions: bool = False,
     ) -> DataFrame:
         """One DataFrame over a committed-file subset. Files committed with
         partition values re-attach the partition column (dropped from the
@@ -879,37 +960,47 @@ class TxLog:
         parquet ``_metadata`` row index and broadcast-anti-join their
         sidecar's (file, pos) set, so deleted positions never surface —
         Delta's DV read path. Sidecars are tiny (positions only), so the
-        anti-join is a broadcast, never a shuffle of the data side."""
+        anti-join is a broadcast, never a shuffle of the data side.
+
+        ``positions=True`` is the scan the DV writer classifies positions
+        from: every row keeps its ``_dv_file``/``_dv_pos`` columns, NO
+        vector is applied (the writer folds prior vectors itself), and
+        schemas merge across evolved file sets."""
         if not files:
-            if st.schema_json is None:
+            if st.schema is None:
                 raise ValueError(f"txlog table {self.path!r} has no commits")
-            return spark.createDataFrame([], StructType.fromJson(json.loads(st.schema_json)))
+            return spark.createDataFrame([], st.schema)
+        merge_schema = merge_schema or positions
         reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
+
+        def with_pos(names: list[str]) -> DataFrame:
+            g = reader.parquet(*[os.path.join(self.data_path, n) for n in names])
+            return g.select(
+                *g.columns,  # _metadata is hidden: capture the data columns
+                F.element_at(
+                    F.split(F.col("_metadata.file_path"), "/"), -1
+                ).alias("_dv_file"),
+                F.col("_metadata.row_index").alias("_dv_pos"),
+            )
 
         def scan(names: list[str]) -> list[DataFrame]:
             """Scans over `names`, DV-applied where a vector is recorded."""
+            if positions:
+                return [with_pos(names)]
             out: list[DataFrame] = []
             plain = [n for n in names if n not in st.dvs]
             dvd = [n for n in names if n in st.dvs]
             if plain:
                 out.append(reader.parquet(*[os.path.join(self.data_path, n) for n in plain]))
             if dvd:
-                g = reader.parquet(*[os.path.join(self.data_path, n) for n in dvd])
-                cols = g.columns  # _metadata is hidden: capture the data columns
-                g = g.select(
-                    *cols,
-                    F.element_at(
-                        F.split(F.col("_metadata.file_path"), "/"), -1
-                    ).alias("_dv_file"),
-                    F.col("_metadata.row_index").alias("_dv_pos"),
-                )
                 side = spark.read.parquet(
                     *sorted({os.path.join(self.data_path, st.dvs[n]) for n in dvd})
                 ).select(
                     F.col("file").alias("_dv_file"), F.col("pos").alias("_dv_pos")
                 )
                 out.append(
-                    g.join(F.broadcast(side), ["_dv_file", "_dv_pos"], "left_anti")
+                    with_pos(dvd)
+                    .join(F.broadcast(side), ["_dv_file", "_dv_pos"], "left_anti")
                     .drop("_dv_file", "_dv_pos")
                 )
             return out
@@ -923,31 +1014,31 @@ class TxLog:
         dfs = []
         if flat:
             dfs.extend(scan(flat))
-        if groups:
-            schema = StructType.fromJson(json.loads(st.schema_json))
-            for key, names in sorted(groups.items(), key=repr):
-                for g in scan(names):
-                    for col, val in key:
-                        g = g.withColumn(col, F.lit(val).cast(schema[col].dataType))
-                    dfs.append(g)
+        for key, names in sorted(groups.items(), key=repr):
+            for g in scan(names):
+                for col, val in key:
+                    g = g.withColumn(col, F.lit(val).cast(st.schema[col].dataType))
+                dfs.append(g)
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=merge_schema)
-        # COLUMN MAPPING: files carry stable physical names; present the
-        # LOGICAL schema (renames applied, dropped columns projected away)
-        # — the read half of metadata-only RENAME/DROP COLUMN.
-        if st.cmap:
-            for lg, ph in st.cmap.items():
-                if ph != lg and ph in out.columns and lg not in out.columns:
-                    out = out.withColumnRenamed(ph, lg)
-        if st.schema_json is not None:
-            logical = [
-                f.name
-                for f in StructType.fromJson(json.loads(st.schema_json)).fields
-            ]
-            if set(out.columns) - set(logical):  # e.g. a dropped column
-                out = out.select(*[c for c in logical if c in out.columns])
-        return out
+        return self._logical(out, st, ("_dv_file", "_dv_pos") if positions else ())
+
+    @staticmethod
+    def _logical(df: DataFrame, st: _State, extra: tuple = ()) -> DataFrame:
+        """COLUMN MAPPING on read: files (and CDF sidecars) carry stable
+        physical names; present the LOGICAL schema — renames applied,
+        dropped columns projected away, `extra` columns kept — the read
+        half of metadata-only RENAME/DROP COLUMN."""
+        for lg, ph in st.cmap.items():
+            if ph != lg and ph in df.columns and lg not in df.columns:
+                df = df.withColumnRenamed(ph, lg)
+        if st.schema is not None:
+            keep = [c for c in st.schema.fieldNames() if c in df.columns]
+            keep += [c for c in extra if c in df.columns]
+            if set(df.columns) - set(keep):  # e.g. a dropped column
+                df = df.select(*keep)
+        return df
 
     def snapshot(
         self,
@@ -1022,14 +1113,16 @@ class TxLog:
         stats_cols: list[str] | None = None,
     ) -> int:
         """Type-1 upsert (MERGE) as lock-free OCC read-modify-write with
-        FILE-LEVEL rewrite: only data files whose recorded [min, max] for
-        `key` intersects the update-key range are read, anti-joined against
-        the update keys, and rewritten; non-intersecting files survive the
-        commit untouched (same names in the manifest) — O(touched bytes)
-        per merge, not O(table), which is what lets a narrow-key upsert
-        land on a fact-scale table. Files committed without `key` stats are
-        conservatively rewritten. Update rows win on key equality (caller
-        supplies one row per key).
+        FILE-LEVEL rewrite — the upsert-only case of :meth:`apply_cdc`'s
+        keyed-upsert core: only data files whose recorded [min, max] for
+        `key` holds one of the update keys (the exact-key probe) are
+        read, anti-joined against the update keys, and rewritten; other
+        files survive the commit untouched (same names in the manifest)
+        — O(touched bytes) per merge, not O(table), which is what lets a
+        narrow-key upsert land on a fact-scale table. Files committed
+        without `key` stats are conservatively rewritten. Update rows
+        win on key equality (caller supplies one row per key). The first
+        commit to a table without files is a plain ``overwrite``.
 
         Serializable with LOGICAL conflict re-validation (Delta VLDB-2020
         §3.2): the commit carries ``expected_version`` plus a benign-
@@ -1046,161 +1139,154 @@ class TxLog:
 
         Pass `stats_cols=[key]` on every append AND merge to keep the
         file-level pruning effective across the table's life."""
-        stats_cols = stats_cols if stats_cols is not None else [key]
         updates = self._apply_generated(updates)
         self._validate(updates)
-        for _ in range(max_retries):
-            st = self.state()
+        probe = cache(lambda: self._key_probe(updates, key))
+
+        def attempt(st: _State) -> int:
             if not st.files:
-                try:
-                    return self.overwrite(
-                        updates, expected_version=st.version, stats_cols=stats_cols
-                    )
-                except TxConflictError:
-                    continue
-            lo, hi = updates.agg(F.min(key), F.max(key)).first()
-            if lo is None:  # empty update set: nothing to merge
+                return self.overwrite(
+                    updates, expected_version=st.version,
+                    stats_cols=stats_cols if stats_cols is not None else [key],
+                )
+            key_rows, overlaps = probe()
+            if overlaps is None:  # no update key: nothing to merge
                 return st.version
-            pkey = st.cmap.get(key, key)  # stats are keyed by physical name
-            id_specs = self._identity_specs(st.props)
-            for c in id_specs:
-                if c in updates.columns:
-                    raise ValueError(
-                        f"identity column {c!r} is GENERATED ALWAYS: merge "
-                        "updates must not supply it"
-                    )
-            touched = [
-                n for n in st.files
-                if (mm := st.stats.get(n, {}).get(pkey)) is None
-                or (mm[0] <= hi and mm[1] >= lo)
-            ]
-            if touched:
-                base = self._read_files(spark, touched, st)
-                ups = updates
-                id_cols = [c for c in sorted(id_specs) if c in base.columns]
-                if id_cols:
-                    # surrogate-key continuity (same rule as apply_cdc):
-                    # an upsert of an existing key keeps that key's id.
-                    # Identity does not enforce key uniqueness (plain
-                    # appends can duplicate a key), so collapse the id map
-                    # to one deterministic id per key — min(id) — or the
-                    # left join would fan each update row out into one row
-                    # per existing id (ADVICE r8).
-                    ups = ups.join(
-                        F.broadcast(
-                            base.join(
-                                F.broadcast(updates.select(key).distinct()),
-                                key, "left_semi",
-                            )
-                            .groupBy(key)
-                            .agg(*[F.min(c).alias(c) for c in id_cols])
-                        ),
-                        key,
-                        "left",
-                    )
-                merged = base.join(
-                    updates.select(key).distinct(), key, "left_anti"
-                ).unionByName(ups, allowMissingColumns=True)
-            else:
-                merged = updates
-            merged, id_props = self._apply_identity(
-                merged, st.props, None, fill_nulls=True
-            )
-            cdf_names: list[str] | None = None
-            if self._cdf_enabled(st):
+
+            def cdf_rows(base: DataFrame | None) -> DataFrame | None:
                 # Delta's CDF on MERGE: pre/post-image for keys that were
                 # present, plain inserts for new keys — typed in a sidecar.
-                if touched:
-                    base_keys = base.select(key).distinct()
-                    pre = base.join(
-                        updates.select(key).distinct(), key, "left_semi"
-                    ).withColumn("_change_type", F.lit("update_preimage"))
-                    post = updates.join(base_keys, key, "left_semi").withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                    ins = updates.join(base_keys, key, "left_anti").withColumn(
-                        "_change_type", F.lit("insert")
-                    )
-                    cdf_rows = pre.unionByName(post).unionByName(ins)
-                else:
-                    cdf_rows = updates.withColumn("_change_type", F.lit("insert"))
-                cdf_names, _, _, _ = self._stage(cdf_rows.coalesce(1))
-            # Rewrite volume ~= touched volume: keep file granularity stable
-            # (no per-merge small-file explosion from shuffle partitioning).
-            merged = merged.coalesce(max(1, len(touched)))
-            names, schema_json, stats, parts = self._stage(
-                merged, stats_cols, cmap=st.cmap
-            )
-            cok = self._disjoint_range_ok(set(touched), pkey, lo, hi)
-            if id_props is not None:
-                range_ok = cok  # watermark commit: properties must not race
-                cok = lambda m: m.get("properties") is None and range_ok(m)  # noqa: E731
-            try:
-                return self.commit_files(
-                    names, op="merge", schema_json=schema_json, removes=touched,
-                    expected_version=st.version, stats=stats, parts=parts,
-                    cdf=cdf_names, properties=id_props, conflict_ok=cok,
+                if not self._cdf_enabled(st):
+                    return None
+                if base is None:
+                    return updates.withColumn("_change_type", F.lit("insert")).coalesce(1)
+                base_keys = base.select(key).distinct()
+                pre = base.join(key_rows, key, "left_semi").withColumn(
+                    "_change_type", F.lit("update_preimage")
                 )
-            except TxConflictError:
-                continue
-        raise TxConflictError(f"merge lost {max_retries} consecutive OCC races")
+                post = updates.join(base_keys, key, "left_semi").withColumn(
+                    "_change_type", F.lit("update_postimage")
+                )
+                ins = updates.join(base_keys, key, "left_anti").withColumn(
+                    "_change_type", F.lit("insert")
+                )
+                return pre.unionByName(post).unionByName(ins).coalesce(1)
+
+            # updates.coalesce(1): a merge that touches no file (new keys
+            # only) lands one file, not one per shuffle partition
+            return self._upsert(
+                spark, st, "merge", updates.coalesce(1), key, key_rows, overlaps,
+                stats_cols, cdf_rows,
+            )
+
+        return self._occ("merge", max_retries, attempt)
+
+    def _upsert(
+        self,
+        spark: SparkSession,
+        st: _State,
+        op: str,
+        upserts: DataFrame,
+        key: str,
+        key_rows: DataFrame,
+        overlaps,
+        stats_cols: list[str] | None,
+        cdf_rows,
+        app_id: str | None = None,
+        app_version: int | None = None,
+    ) -> int:
+        """The keyed-upsert core of :meth:`merge` and :meth:`apply_cdc`,
+        one OCC attempt against `st`: the files the key probe cannot rule
+        out are read, their rows whose key is in `key_rows` (the batch's
+        upserted AND deleted keys) are dropped, `upserts` are unioned in,
+        and the result replaces exactly those files — untouched files
+        survive by name. Identity columns keep an existing key's id and
+        allocate past the watermark for new keys. ``cdf_rows(base)``
+        (``base`` is None when no file was touched) returns the rows to
+        stage as the commit's change-feed sidecar, or None. The commit
+        re-validates intervening manifests against the touched files and
+        the batch's keys."""
+        id_specs = self._identity_specs(st.props)
+        self._refuse_identity(upserts, id_specs, f"{op} rows")
+        _, touched = self._classify(st, key, overlaps)
+        base = self._read_files(spark, touched, st) if touched else None
+        merged = upserts
+        if base is not None:
+            id_cols = [c for c in sorted(id_specs) if c in base.columns]
+            if id_cols:
+                # surrogate-key continuity: an upsert of an existing key
+                # keeps that key's current id (broadcast of the touched
+                # keys' id map — bounded by the batch). min(id) per key:
+                # duplicate keys from plain appends must not fan an
+                # upsert out into one row per id (ADVICE r8).
+                ids = (
+                    base.join(F.broadcast(key_rows), key, "left_semi")
+                    .groupBy(key)
+                    .agg(*[F.min(c).alias(c) for c in id_cols])
+                )
+                merged = merged.join(F.broadcast(ids), key, "left")
+            merged = base.join(key_rows, key, "left_anti").unionByName(
+                merged, allowMissingColumns=True
+            )
+        merged, id_props = self._apply_identity(merged, st.props, None, fill_nulls=True)
+        # Rewrite volume ~= touched volume: keep file granularity stable
+        # (no per-commit small-file explosion from shuffle partitioning).
+        if touched:
+            merged = merged.coalesce(len(touched))
+        names, schema_json, stats, parts = self._stage(
+            merged, stats_cols if stats_cols is not None else [key], cmap=st.cmap
+        )
+        cdf = cdf_rows(base)
+        cdf_names = self._stage(cdf)[0] if cdf is not None else None
+        return self.commit_files(
+            names, op=op, schema_json=schema_json, removes=touched,
+            expected_version=st.version, stats=stats, parts=parts,
+            cdf=cdf_names, app_id=app_id, app_version=app_version,
+            properties=id_props,
+            conflict_ok=self._disjoint_range_ok(
+                set(touched), st.cmap.get(key, key), hits=overlaps
+            ),
+        )
 
     @staticmethod
-    def _disjoint_range_ok(touched: set, key: str, lo, hi, hits=None):
-        """Benign-manifest predicate for the read-modify-write family: an
-        intervening commit cannot affect a merge/cdc/scd2 derived over
-        `touched` iff it (a) is not a table rewrite, (b) neither removed
-        nor attached a deletion vector to any touched file, and (c) every
-        file it added carries `key` stats proving it holds none of the
-        write's keys — via the exact-key probe `hits` when given, else
-        the [lo, hi] range. Anything unprovable is NOT benign (falls back
-        to re-derive), so correctness never leans on the stats being
-        present."""
-        overlaps = hits if hits is not None else (
-            lambda mn, mx: mn <= hi and mx >= lo
-        )
+    def _disjoint_range_ok(touched: set, key: str | None = None, lo=None, hi=None, hits=None):
+        """Benign-manifest predicate of the read-modify-write verbs: an
+        intervening commit cannot affect a write derived over `touched`
+        iff it (a) is not a table rewrite, (b) changed no column mapping
+        (a rename/drop landed after the derive: the staged files and
+        schema_json carry the OLD logical names, and replay is
+        latest-schema-wins), (c) neither removed nor attached a deletion
+        vector to any touched file — a DV'd file rewritten from its
+        pre-DV read would resurrect the concurrently-deleted rows
+        (ADVICE r7) — and, with `key`, (d) every file it added carries
+        `key` stats proving it holds none of the write's keys: via the
+        key probe `hits` when given, else the range [lo, hi].
+
+        With `key` it serves merge/cdc/scd2/delete_to_dv, whose read set
+        includes the ABSENCE of keys. Without it, it serves UPDATE /
+        DELETE / OPTIMIZE — verbs that only modify rows they READ — so a
+        concurrent APPEND is benign whatever its keys: the result is as
+        if the rewrite committed first and the append after (Delta's
+        WriteSerializable rule). Anything unprovable is NOT benign
+        (falls back to re-derive), so correctness never leans on the
+        stats being present."""
+        overlaps = hits if hits is not None else _in_range(lo, hi)
 
         def ok(m: dict) -> bool:
             if m["op"] in ("replace", "restore"):
                 return False
             if m.get("column_mapping") is not None:
-                # rename/drop landed after our derive: our staged files and
-                # schema_json carry the OLD logical names — committing them
-                # would revert the rename in replay (latest schema wins).
                 return False
             if touched & set(m.get("removes") or []):
                 return False
             if touched & set((m.get("dvs") or {}).keys()):
                 return False
+            if key is None:
+                return True
             for n in m.get("adds") or []:
                 mm = (m.get("stats") or {}).get(n, {}).get(key)
                 if mm is None or overlaps(mm[0], mm[1]):
                     return False
-            return True
-
-        return ok
-
-    @staticmethod
-    def _rewrite_safe_ok(touched: set):
-        """Benign-manifest predicate for UPDATE / DELETE / OPTIMIZE — verbs
-        that only modify rows they READ, so (unlike merge/cdc, whose read
-        set includes absence-of-key) a concurrent APPEND is benign
-        regardless of key range: the result is as if the rewrite committed
-        first and the append after — Delta's WriteSerializable rule. NOT
-        benign: a table rewrite, a schema/mapping change, or any commit
-        that removed OR attached a deletion vector to a touched file — a
-        DV'd file this verb rewrites from its pre-DV read would silently
-        resurrect the concurrently-deleted rows (ADVICE r7)."""
-
-        def ok(m: dict) -> bool:
-            if m["op"] in ("replace", "restore"):
-                return False
-            if m.get("column_mapping") is not None:
-                return False
-            if touched & set(m.get("removes") or []):
-                return False
-            if touched & set((m.get("dvs") or {}).keys()):
-                return False
             return True
 
         return ok
@@ -1254,10 +1340,10 @@ class TxLog:
         divergence; the feed's key/payload columns are complete).
 
         FILE-LEVEL like :meth:`merge`: only files whose [min, max] for
-        `key` intersects the source key range are read/rewritten — unless
-        ``when_not_matched_by_source`` is given, which (exactly as in
-        Delta) forces a full-table read because ANY target row may be
-        affected. Conflict rule: without NOT-MATCHED-BY-SOURCE clauses the
+        `key` holds a source key (the same key probe) are read and
+        rewritten — unless ``when_not_matched_by_source`` is given,
+        which (exactly as in Delta) forces a full-table read because ANY
+        target row may be affected. Conflict rule: without NOT-MATCHED-BY-SOURCE clauses the
         benign-manifest re-validation applies (disjoint appends commit
         alongside); with them the read set is the whole table, so any
         intervening commit forces a re-derive. Updates evaluate against
@@ -1284,26 +1370,19 @@ class TxLog:
             if cl[0] != "insert":
                 raise ValueError(f"NOT MATCHED supports insert, got {cl[0]!r}")
         full_scan = bool(when_not_matched_by_source)
-        for _ in range(max_retries):
-            st = self.state()
-            if st.schema_json is None:
+        probe = cache(lambda: self._key_probe(source, key))
+
+        def attempt(st: _State) -> int:
+            if st.schema is None:
                 # First commit: an empty target — every source row is
                 # NOT MATCHED. Delta allows MERGE as the initial load.
                 tcols = list(source.columns)
                 base = spark.createDataFrame([], source.schema)
             else:
-                tcols = [
-                    f.name
-                    for f in StructType.fromJson(json.loads(st.schema_json)).fields
-                ]
+                tcols = st.schema.fieldNames()
                 base = None  # read after pruning below
             id_specs = self._identity_specs(st.props)
-            for c in id_specs:
-                if c in source.columns:
-                    raise ValueError(
-                        f"identity column {c!r} is GENERATED ALWAYS: merge "
-                        "sources must not supply it"
-                    )
+            self._refuse_identity(source, id_specs, "merge sources")
             for cl in when_matched + when_not_matched_by_source:
                 if cl[0] == "update":
                     unknown = set(cl[2]) - set(tcols)
@@ -1329,18 +1408,10 @@ class TxLog:
                 new_cols = [c for c in source.columns if c not in tcols]
                 src_types = dict(source.dtypes)
             out_cols = tcols + new_cols
-            lo, hi = source.agg(F.min(key), F.max(key)).first()
-            if lo is None and not full_scan:
+            _, overlaps = probe()
+            if overlaps is None and not full_scan:
                 return st.version  # empty source can only touch via NMBS
-            pkey = st.cmap.get(key, key)
-            if full_scan or st.schema_json is None:
-                touched = list(st.files)
-            else:
-                touched = [
-                    n for n in st.files
-                    if (mm := st.stats.get(n, {}).get(pkey)) is None
-                    or (mm[0] <= hi and mm[1] >= lo)
-                ]
+            touched = list(st.files) if full_scan else self._classify(st, key, overlaps)[1]
             if base is None:
                 base = self._read_files(spark, touched, st)
             # Delta's nondeterministic-MERGE guard (ADVICE r7): several
@@ -1470,28 +1541,20 @@ class TxLog:
                 )
                 cdf_rows = pre.unionByName(post).unionByName(deleted).unionByName(inserted)
                 cdf_names, _, _, _ = self._stage(cdf_rows.coalesce(1))
-            merged = merged.coalesce(max(1, len(touched) or 1))
+            merged = merged.coalesce(max(1, len(touched)))
             sc = stats_cols if stats_cols is not None else [key]
             adds, schema_json, stats, parts = self._stage(merged, sc, cmap=st.cmap)
-            cok = (
-                None if full_scan or lo is None
-                else self._disjoint_range_ok(set(touched), pkey, lo, hi)
+            return self.commit_files(
+                adds, op="merge_into", schema_json=schema_json,
+                removes=touched, expected_version=st.version,
+                stats=stats, parts=parts, cdf=cdf_names,
+                properties=id_props,
+                conflict_ok=None if full_scan else self._disjoint_range_ok(
+                    set(touched), st.cmap.get(key, key), hits=overlaps
+                ),
             )
-            if id_props is not None and cok is not None:
-                # the commit carries the advanced identity watermark: any
-                # intervening properties commit must force a re-derive
-                range_ok = cok
-                cok = lambda m: m.get("properties") is None and range_ok(m)  # noqa: E731
-            try:
-                return self.commit_files(
-                    adds, op="merge_into", schema_json=schema_json,
-                    removes=touched, expected_version=st.version,
-                    stats=stats, parts=parts, cdf=cdf_names,
-                    properties=id_props, conflict_ok=cok,
-                )
-            except TxConflictError:
-                continue
-        raise TxConflictError(f"merge_into lost {max_retries} consecutive OCC races")
+
+        return self._occ("merge_into", max_retries, attempt)
 
     def delete(
         self,
@@ -1529,38 +1592,26 @@ class TxLog:
         range-free full-predicate delete is `overwrite(snapshot.where(~p),
         expected_version=...)` — deliberately not this method, which
         exists for the stats-prunable case that survives fact scale."""
-        for _ in range(max_retries):
-            st = self.state()
-            if not st.files:
-                return st.version
-            pkey = st.cmap.get(key, key)  # stats are keyed by physical name
-            drop: list[str] = []
-            rewrite: list[str] = []
-            for n in st.files:
-                mm = st.stats.get(n, {}).get(pkey)
-                if mm is not None and (mm[1] < lo or mm[0] > hi):
-                    continue  # cannot contain matches: untouched
-                if mm is not None and condition is None and lo <= mm[0] and mm[1] <= hi:
-                    drop.append(n)  # every row matches: metadata-only drop
-                else:
-                    rewrite.append(n)
+        pred = self._range_pred(key, lo, hi, condition)
+
+        def attempt(st: _State) -> int:
+            drop, rewrite = self._classify(
+                st, key, _in_range(lo, hi),
+                covers=None if condition is not None
+                else lambda mn, mx: lo <= mn and mx <= hi,
+            )
             if not drop and not rewrite:
                 return st.version
-            pred = F.col(key).between(F.lit(lo), F.lit(hi))
-            if condition is not None:
-                cond = F.expr(condition) if isinstance(condition, str) else condition
-                pred = pred & cond
             adds: list[str] = []
             schema_json, stats, parts = st.schema_json, {}, {}
             cdf_names: list[str] | None = None
-            if self._cdf_enabled(st) and (drop or rewrite):
+            if self._cdf_enabled(st):
                 # Delta's CDF on DELETE: the deleted rows, typed. Note the
                 # metadata-drop fast path must READ its files for this —
                 # the documented cost of enabling CDF (Delta pays it too).
-                gone = self._read_files(spark, drop + rewrite, st).where(
-                    pred.eqNullSafe(F.lit(True))
-                ).withColumn("_change_type", F.lit("delete"))
-                cdf_names, _, _, _ = self._stage(gone.coalesce(1))
+                cdf_names = self._stage(
+                    self._deleted(spark, drop + rewrite, st, pred).coalesce(1)
+                )[0]
             if rewrite:
                 kept = self._read_files(spark, rewrite, st).where(
                     ~pred.eqNullSafe(F.lit(True))
@@ -1569,21 +1620,28 @@ class TxLog:
                 kept = kept.coalesce(max(1, len(rewrite)))
                 sc = stats_cols if stats_cols is not None else [key]
                 adds, schema_json, stats, parts = self._stage(kept, sc, cmap=st.cmap)
-            try:
-                # Same DV-race guard as update() (ADVICE r7): a concurrent
-                # delete_to_dv on a file this delete rewrites would have
-                # its deleted rows resurrected by the pre-DV-derived
-                # rewrite; appends remain benign and their rows are NOT
-                # deleted (they serialize after this delete).
-                return self.commit_files(
-                    adds, op="delete", schema_json=schema_json,
-                    removes=drop + rewrite, stats=stats, parts=parts,
-                    cdf=cdf_names, expected_version=st.version,
-                    conflict_ok=self._rewrite_safe_ok(set(drop) | set(rewrite)),
-                )
-            except TxConflictError:
-                continue
-        raise TxConflictError(f"delete lost {max_retries} consecutive OCC races")
+            # Appends are benign and their rows are NOT deleted (they
+            # serialize after this delete); a concurrent delete_to_dv on
+            # a rewritten file is not (its rows would resurrect).
+            return self.commit_files(
+                adds, op="delete", schema_json=schema_json,
+                removes=drop + rewrite, stats=stats, parts=parts,
+                cdf=cdf_names, expected_version=st.version,
+                conflict_ok=self._disjoint_range_ok(set(drop) | set(rewrite)),
+            )
+
+        return self._occ("delete", max_retries, attempt)
+
+    def _deleted(
+        self, spark: SparkSession, files: list[str], st: _State, pred: F.Column
+    ) -> DataFrame:
+        """The change-feed rows of a delete: `files`' rows `pred` holds
+        for, typed ``delete``."""
+        return (
+            self._read_files(spark, files, st)
+            .where(pred.eqNullSafe(F.lit(True)))
+            .withColumn("_change_type", F.lit("delete"))
+        )
 
     def delete_to_dv(
         self,
@@ -1619,48 +1677,25 @@ class TxLog:
         ``expected_version`` plus the disjoint-range predicate, so a
         racing append outside [lo, hi] commits both writers first-try;
         anything touching the classified files re-derives."""
-        for _ in range(max_retries):
-            st = self.state()
-            if not st.files:
-                return st.version
-            pkey = st.cmap.get(key, key)  # stats are keyed by physical name
-            drop: list[str] = []
-            dv_targets: list[str] = []
-            for n in st.files:
-                mm = st.stats.get(n, {}).get(pkey)
-                if mm is not None and (mm[1] < lo or mm[0] > hi):
-                    continue  # cannot contain matches: untouched
-                if mm is not None and condition is None and lo <= mm[0] and mm[1] <= hi:
-                    # Every live row matches: metadata drop (a prior DV
-                    # rides out with the removed file — same outcome,
-                    # cheaper than a DV of every remaining position).
-                    drop.append(n)
-                else:
-                    dv_targets.append(n)
+        pred = self._range_pred(key, lo, hi, condition)
+
+        def attempt(st: _State) -> int:
+            # A wholly-matched file drops as metadata: a prior DV rides
+            # out with the removed file — same outcome, cheaper than a DV
+            # of every remaining position.
+            drop, dv_targets = self._classify(
+                st, key, _in_range(lo, hi),
+                covers=None if condition is not None
+                else lambda mn, mx: lo <= mn and mx <= hi,
+            )
             if not drop and not dv_targets:
                 return st.version
-            pred = F.col(key).between(F.lit(lo), F.lit(hi))
-            if condition is not None:
-                cond = F.expr(condition) if isinstance(condition, str) else condition
-                pred = pred & cond
             dvs: dict = {}
-            sidecars: list[str] = []
-            cdf_names: list[str] | None = None
-            if self._cdf_enabled(st) and drop and not dv_targets:
-                # drop-only path still feeds the change feed (reads the
-                # dropped files once — the documented cost of CDF)
-                gone = (
-                    self._read_files(spark, drop, st)
-                    .where(pred.eqNullSafe(F.lit(True)))
-                    .withColumn("_change_type", F.lit("delete"))
-                )
-                cdf_names, _, _, _ = self._stage(gone.coalesce(1))
             if dv_targets:
-                scan = self._scan_positions(spark, dv_targets, st)
-                matched = scan.where(pred.eqNullSafe(F.lit(True)))
-                prior = sorted({
-                    st.dvs[n] for n in dv_targets if n in st.dvs
-                })
+                matched = self._read_files(spark, dv_targets, st, positions=True).where(
+                    pred.eqNullSafe(F.lit(True))
+                )
+                prior = sorted({st.dvs[n] for n in dv_targets if n in st.dvs})
                 carried = None
                 if prior:
                     carried = spark.read.parquet(
@@ -1678,17 +1713,6 @@ class TxLog:
                         ["_dv_file", "_dv_pos"],
                         "left_anti",
                     )
-                if self._cdf_enabled(st):
-                    gone = matched.selectExpr(
-                        *[c for c in matched.columns if c not in ("_dv_file", "_dv_pos")]
-                    ).withColumn("_change_type", F.lit("delete"))
-                    if drop:
-                        gone = gone.unionByName(
-                            self._read_files(spark, drop, st)
-                            .where(pred.eqNullSafe(F.lit(True)))
-                            .withColumn("_change_type", F.lit("delete"))
-                        )
-                    cdf_names, _, _, _ = self._stage(gone.coalesce(1))
                 hits = matched.select(
                     F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos")
                 )
@@ -1698,82 +1722,31 @@ class TxLog:
                 # anti-join on (file, pos), so sharing is free
                 hit_files = {r[0] for r in hits.select("file").distinct().collect()}
                 if hit_files:
-                    sidecars, _, _, _ = self._stage(hits.coalesce(1))
-                    dvs = {n: sidecars[0] for n in sorted(hit_files)}
+                    sidecar = self._stage(hits.coalesce(1))[0][0]
+                    dvs = {n: sidecar for n in sorted(hit_files)}
             if not drop and not dvs:
-                self._delete_staged(cdf_names or [])
                 return st.version  # predicate matched nothing
-            try:
-                return self.commit_files(
-                    [], op="delete", schema_json=st.schema_json,
-                    removes=drop, dvs=dvs, cdf=cdf_names,
-                    expected_version=st.version,
-                    conflict_ok=self._disjoint_range_ok(
-                        set(drop) | set(dv_targets), pkey, lo, hi
-                    ),
-                )
-            except TxConflictError:
-                continue
-        raise TxConflictError(
-            f"delete_to_dv lost {max_retries} consecutive OCC races"
-        )
-
-    def _scan_positions(
-        self, spark: SparkSession, files: list[str], st: _State
-    ) -> DataFrame:
-        """Like :meth:`_read_files` but with ``_dv_file``/``_dv_pos``
-        row-position columns attached and NO deletion-vector anti-join
-        (the DV write path folds prior vectors itself) — the scan the DV
-        writer classifies positions from. Shares _read_files' column
-        handling (ADVICE r7): Hive-partitioned files get their partition
-        column re-attached as a typed literal (so predicates may
-        reference it), schemas merge across evolved file sets, and
-        physical names translate to logical ones."""
-        reader = spark.read.option("mergeSchema", "true")
-
-        def scan(names: list[str]) -> DataFrame:
-            g = reader.parquet(*[os.path.join(self.data_path, n) for n in names])
-            cols = g.columns  # _metadata is hidden: capture the data columns
-            return g.select(
-                *cols,
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias("_dv_file"),
-                F.col("_metadata.row_index").alias("_dv_pos"),
+            cdf_names: list[str] | None = None
+            if self._cdf_enabled(st):
+                # the dropped files are read once for the feed — the
+                # documented cost of CDF
+                gone = [self._deleted(spark, drop, st, pred)] if drop else []
+                if dv_targets:
+                    gone.append(
+                        matched.drop("_dv_file", "_dv_pos")
+                        .withColumn("_change_type", F.lit("delete"))
+                    )
+                cdf_names = self._stage(reduce(DataFrame.unionByName, gone).coalesce(1))[0]
+            return self.commit_files(
+                [], op="delete", schema_json=st.schema_json,
+                removes=drop, dvs=dvs, cdf=cdf_names,
+                expected_version=st.version,
+                conflict_ok=self._disjoint_range_ok(
+                    set(drop) | set(dv_targets), st.cmap.get(key, key), lo, hi
+                ),
             )
 
-        flat = [n for n in files if n not in st.parts]
-        groups: dict[tuple, list[str]] = {}
-        for n in files:
-            pv = st.parts.get(n)
-            if pv is not None:
-                groups.setdefault(tuple(sorted(pv.items())), []).append(n)
-        dfs = []
-        if flat:
-            dfs.append(scan(flat))
-        if groups:
-            schema = StructType.fromJson(json.loads(st.schema_json))
-            for pkey_vals, names in sorted(groups.items(), key=repr):
-                g = scan(names)
-                for col, val in pkey_vals:
-                    g = g.withColumn(col, F.lit(val).cast(schema[col].dataType))
-                dfs.append(g)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        for lg, ph in st.cmap.items():  # files carry physical names
-            if ph != lg and ph in out.columns and lg not in out.columns:
-                out = out.withColumnRenamed(ph, lg)
-        if st.schema_json is not None:
-            logical = [
-                f.name
-                for f in StructType.fromJson(json.loads(st.schema_json)).fields
-            ]
-            keep = [c for c in logical if c in out.columns]
-            keep += ["_dv_file", "_dv_pos"]
-            if set(out.columns) - set(keep):  # e.g. a dropped column
-                out = out.select(*keep)
-        return out
+        return self._occ("delete_to_dv", max_retries, attempt)
 
     def update(
         self,
@@ -1809,34 +1782,20 @@ class TxLog:
         that actually hold the window — O(touched bytes), not O(table).
         Reference analog: dim upserts (DimSinkFunction.java:17-89) are
         key-targeted UPDATEs; this is the multi-writer table-format form."""
-        for _ in range(max_retries):
-            st = self.state()
+        def attempt(st: _State) -> int:
             if not st.files:
                 return st.version
-            schema_cols = [
-                f.name
-                for f in StructType.fromJson(json.loads(st.schema_json)).fields
-            ]
-            unknown = set(set_exprs) - set(schema_cols)
+            unknown = set(set_exprs) - set(st.schema.fieldNames())
             if unknown:
                 raise ValueError(f"UPDATE assigns unknown columns: {sorted(unknown)}")
-            pkey = st.cmap.get(key, key)  # stats are keyed by physical name
-            rewrite = [
-                n for n in st.files
-                if (mm := st.stats.get(n, {}).get(pkey)) is None
-                or (mm[0] <= hi and mm[1] >= lo)
-            ]
+            _, rewrite = self._classify(st, key, _in_range(lo, hi))
             if not rewrite:
                 return st.version
-            pred = F.col(key).between(F.lit(lo), F.lit(hi))
-            if condition is not None:
-                cond = F.expr(condition) if isinstance(condition, str) else condition
-                pred = pred & cond
-            base = self._read_files(spark, rewrite, st)
-            matched = pred.eqNullSafe(F.lit(True))
+            matched = self._range_pred(key, lo, hi, condition).eqNullSafe(F.lit(True))
             assigned = {
                 c: (F.expr(e) if isinstance(e, str) else e) for c, e in set_exprs.items()
             }
+            base = self._read_files(spark, rewrite, st)
             updated = base.select(
                 *[
                     F.when(matched, assigned[c]).otherwise(F.col(c)).alias(c)
@@ -1860,27 +1819,19 @@ class TxLog:
                         for c in base.columns
                     ]
                 ).withColumn("_change_type", F.lit("update_postimage"))
-                cdf_names, _, _, _ = self._stage(pre.unionByName(post).coalesce(1))
+                cdf_names = self._stage(pre.unionByName(post).coalesce(1))[0]
             # Rewrite volume ~= touched volume (same rule as merge/delete).
             updated = updated.coalesce(max(1, len(rewrite)))
             sc = stats_cols if stats_cols is not None else [key]
             adds, schema_json, stats, parts = self._stage(updated, sc, cmap=st.cmap)
-            try:
-                # Serializable vs concurrent DV attaches (ADVICE r7): the
-                # rewrite was derived from the files' PRE-DV contents, so a
-                # racing delete_to_dv on a touched file must force a
-                # re-derive — the disjoint-file rule alone would let the
-                # deleted rows resurrect in the rewritten file. Plain
-                # appends stay benign (WriteSerializable).
-                return self.commit_files(
-                    adds, op="update", schema_json=schema_json,
-                    removes=rewrite, stats=stats, parts=parts, cdf=cdf_names,
-                    expected_version=st.version,
-                    conflict_ok=self._rewrite_safe_ok(set(rewrite)),
-                )
-            except TxConflictError:
-                continue
-        raise TxConflictError(f"update lost {max_retries} consecutive OCC races")
+            return self.commit_files(
+                adds, op="update", schema_json=schema_json,
+                removes=rewrite, stats=stats, parts=parts, cdf=cdf_names,
+                expected_version=st.version,
+                conflict_ok=self._disjoint_range_ok(set(rewrite)),
+            )
+
+        return self._occ("update", max_retries, attempt)
 
     def restore(self, version: int, expected_version: int | None = None) -> int:
         """RESTORE TABLE TO VERSION (Delta's RESTORE, public docs): commit
@@ -1965,26 +1916,10 @@ class TxLog:
         ``changes()``/the streaming source skip them; ranges read after
         a rename serve the CURRENT logical names (Delta CDF with column
         mapping behaves the same)."""
-        for _ in range(max_retries):
-            st = self.state()
-            if st.schema_json is None:
-                raise ValueError(f"txlog table {self.path!r} has no commits")
-            schema = StructType.fromJson(json.loads(st.schema_json))
-            names = [f.name for f in schema.fields]
-            if old not in names:
-                raise ValueError(f"no such column: {old!r}")
+        def attempt(st: _State) -> int:
+            names = self._alterable(st, old, "rename")
             if new in names:
                 raise ValueError(f"column {new!r} already exists")
-            if any(old in (pv or {}) for pv in st.parts.values()):
-                raise ValueError(f"cannot rename partition column {old!r}")
-            for cname, expr in self.constraints().items():
-                import re
-
-                if re.search(rf"\b{re.escape(old)}\b", expr):
-                    raise ValueError(
-                        f"column {old!r} is referenced by CHECK constraint "
-                        f"{cname!r} ({expr}); drop the constraint first"
-                    )
             physical = {c: st.cmap.get(c, c) for c in names}
             if new in {ph for c, ph in physical.items() if c != old}:
                 raise ValueError(
@@ -1999,17 +1934,35 @@ class TxLog:
                     StructField(new, f.dataType, f.nullable, f.metadata)
                     if f.name == old
                     else f
-                    for f in schema.fields
+                    for f in st.schema.fields
                 ]
             )
-            try:
-                return self.commit_files(
-                    [], op="rename", schema_json=new_schema.json(),
-                    column_mapping=cmap, expected_version=st.version,
+            return self.commit_files(
+                [], op="rename", schema_json=new_schema.json(),
+                column_mapping=cmap, expected_version=st.version,
+            )
+
+        # a racing commit may have evolved the schema: re-derive
+        return self._occ("rename", max_retries, attempt)
+
+    def _alterable(self, st: _State, name: str, verb: str) -> list[str]:
+        """The table's logical column names, after refusing a RENAME/DROP
+        of `name` that is absent, a partition column, or referenced by a
+        CHECK constraint."""
+        if st.schema is None:
+            raise ValueError(f"txlog table {self.path!r} has no commits")
+        names = st.schema.fieldNames()
+        if name not in names:
+            raise ValueError(f"no such column: {name!r}")
+        if any(name in (pv or {}) for pv in st.parts.values()):
+            raise ValueError(f"cannot {verb} partition column {name!r}")
+        for cname, expr in self.constraints().items():
+            if re.search(rf"\b{re.escape(name)}\b", expr):
+                raise ValueError(
+                    f"column {name!r} is referenced by CHECK constraint "
+                    f"{cname!r} ({expr}); drop the constraint first"
                 )
-            except TxConflictError:
-                continue  # racing commit may have evolved the schema: re-derive
-        raise TxConflictError(f"rename lost {max_retries} consecutive races")
+        return names
 
     def drop_column(self, name: str, max_retries: int = 10) -> int:
         """DROP COLUMN as a METADATA-ONLY commit (Delta column mapping):
@@ -2024,36 +1977,18 @@ class TxLog:
         dropped values back out of pre-drop files. Run
         :meth:`optimize` (a full rewrite) after a drop before reusing
         the name."""
-        for _ in range(max_retries):
-            st = self.state()
-            if st.schema_json is None:
-                raise ValueError(f"txlog table {self.path!r} has no commits")
-            schema = StructType.fromJson(json.loads(st.schema_json))
-            if name not in [f.name for f in schema.fields]:
-                raise ValueError(f"no such column: {name!r}")
-            if len(schema.fields) == 1:
+        def attempt(st: _State) -> int:
+            if len(self._alterable(st, name, "drop")) == 1:
                 raise ValueError("cannot drop the only column")
-            if any(name in (pv or {}) for pv in st.parts.values()):
-                raise ValueError(f"cannot drop partition column {name!r}")
-            for cname, expr in self.constraints().items():
-                import re
-
-                if re.search(rf"\b{re.escape(name)}\b", expr):
-                    raise ValueError(
-                        f"column {name!r} is referenced by CHECK constraint "
-                        f"{cname!r} ({expr}); drop the constraint first"
-                    )
             cmap = dict(st.cmap)
             cmap.pop(name, None)
-            new_schema = StructType([f for f in schema.fields if f.name != name])
-            try:
-                return self.commit_files(
-                    [], op="drop_column", schema_json=new_schema.json(),
-                    column_mapping=cmap, expected_version=st.version,
-                )
-            except TxConflictError:
-                continue
-        raise TxConflictError(f"drop_column lost {max_retries} consecutive races")
+            new_schema = StructType([f for f in st.schema.fields if f.name != name])
+            return self.commit_files(
+                [], op="drop_column", schema_json=new_schema.json(),
+                column_mapping=cmap, expected_version=st.version,
+            )
+
+        return self._occ("drop_column", max_retries, attempt)
 
     # -- table properties ----------------------------------------------
 
@@ -2064,24 +1999,20 @@ class TxLog:
         commit carrying the full updated map, latest wins; replayed and
         checkpointed with the log, restored by RESTORE, carried by CLONE.
         Behavior key: ``enableChangeDataFeed`` = "true" makes
-        update/delete/delete_to_dv/merge stage typed CHANGE-DATA-FEED
+        update/delete/delete_to_dv/merge/merge_into stage typed CHANGE-DATA-FEED
         sidecars (Delta's delta.enableChangeDataFeed), which is what lets
         ``changes(cdf=True)``/the streaming source follow those commits
         instead of demanding a re-sync."""
-        for _ in range(max_retries):
-            st = self.state()
-            props = dict(st.props)
-            if props.get(name) == value:
+        def attempt(st: _State) -> int:
+            if st.props.get(name) == value:
                 return st.version
-            props[name] = value
-            try:
-                return self.commit_files(
-                    [], op="property", schema_json=st.schema_json,
-                    properties=props, expected_version=st.version,
-                )
-            except TxConflictError:
-                continue  # merge with whatever map the winner committed
-        raise TxConflictError(f"set_property lost {max_retries} races")
+            # a lost race re-derives from whatever map the winner committed
+            return self.commit_files(
+                [], op="property", schema_json=st.schema_json,
+                properties={**st.props, name: value}, expected_version=st.version,
+            )
+
+        return self._occ("set_property", max_retries, attempt)
 
     def properties(self) -> dict:
         """Active table properties (name -> value)."""
@@ -2168,12 +2099,8 @@ class TxLog:
         if step == 0:
             raise ValueError("identity step must be nonzero")
         st = self.state()
-        if st.schema_json is not None:
-            cols = [
-                f.name
-                for f in StructType.fromJson(json.loads(st.schema_json)).fields
-            ]
-            if name in cols:
+        if st.schema is not None:
+            if name in st.schema.fieldNames():
                 raise ValueError(
                     f"identity column {name!r} already exists in the schema; "
                     "register it before the first data commit"
@@ -2520,13 +2447,9 @@ class TxLog:
         deletes without the upserts or vice versa — both land in the
         same manifest.
 
-        File-level like merge/delete, but classified against the EXACT
-        change-key set, not its [min,max] envelope (a CDC batch touching
-        low and high keys would otherwise rewrite every file between):
-        change keys up to `_CDC_KEYS_MAX` are collected sorted and each
-        file's recorded [min,max] is probed by binary search — a CDC
-        batch is bounded by ingest rate, so the collect is small by
-        construction; beyond the cap it degrades to the coarse range.
+        File-level, classified against the EXACT change-key set, not its
+        [min,max] envelope (:meth:`_key_probe` — a CDC batch touching
+        low and high keys would otherwise rewrite every file between).
         Files no change key lands in survive untouched (same names).
         Serializable via expected_version, retried on conflict. With
         (app_id, app_version) the apply is an idempotent streaming-epoch
@@ -2541,8 +2464,6 @@ class TxLog:
         keys allocate past the watermark, and the advanced mark commits
         atomically with the batch. The CDF sidecar stages the raw
         envelope (no identity column; readers union it null-filled)."""
-        from bisect import bisect_left
-
         if app_id is not None and app_version is not None:
             st0 = self.state()
             if st0.apps.get(app_id, -1) >= app_version:
@@ -2560,95 +2481,30 @@ class TxLog:
         op_is_delete = F.col(op_col).isin(*delete_ops)
         upserts = changes.where(~op_is_delete).drop(op_col)
         self._validate(upserts)
-        key_rows = changes.where(F.col(key).isNotNull()).select(key).distinct()
-        keys = [r[0] for r in key_rows.limit(self._CDC_KEYS_MAX + 1).collect()]
-        exact = len(keys) <= self._CDC_KEYS_MAX
-        keys.sort()
-        if not keys:
+        key_rows, overlaps = self._key_probe(changes, key)
+        if overlaps is None:
             return self.state().version
-        klo, khi = keys[0], keys[-1]
 
-        def hits(mn, mx) -> bool:
-            if not exact:
-                return mn <= khi and mx >= klo
-            i = bisect_left(keys, mn)
-            return i < len(keys) and keys[i] <= mx
-
-        stats_cols = stats_cols if stats_cols is not None else [key]
-        for _ in range(max_retries):
-            st = self.state()
-            if app_id is not None and app_version is not None:
-                if st.apps.get(app_id, -1) >= app_version:
-                    return st.version
-            id_specs = self._identity_specs(st.props)
-            for c in id_specs:
-                if c in changes.columns:
-                    raise ValueError(
-                        f"identity column {c!r} is GENERATED ALWAYS: CDC "
-                        "change batches must not supply it"
-                    )
-            pkey = st.cmap.get(key, key)  # stats are keyed by physical name
-            touched = [
-                n for n in st.files
-                if (mm := st.stats.get(n, {}).get(pkey)) is None or hits(mm[0], mm[1])
-            ]
-            if touched:
-                base = self._read_files(spark, touched, st)
-                ups = upserts
-                id_cols = [c for c in sorted(id_specs) if c in base.columns]
-                if id_cols:
-                    # surrogate-key continuity: an upsert of an existing
-                    # key keeps that key's current id (broadcast of the
-                    # touched keys' id map — bounded by the change batch).
-                    # min(id) per key: duplicate keys from plain appends
-                    # must not fan updates out into one row per id
-                    # (ADVICE r8).
-                    ups = ups.join(
-                        F.broadcast(
-                            base.join(F.broadcast(key_rows), key, "left_semi")
-                            .groupBy(key)
-                            .agg(*[F.min(c).alias(c) for c in id_cols])
-                        ),
-                        key,
-                        "left",
-                    )
-                merged = base.join(key_rows, key, "left_anti").unionByName(
-                    ups, allowMissingColumns=True
-                )
-                merged = merged.coalesce(max(1, len(touched)))
-            else:
-                merged = upserts
-            merged, id_props = self._apply_identity(
-                merged, st.props, None, fill_nulls=True
-            )
-            names, schema_json, stats, parts = self._stage(
-                merged, stats_cols, cmap=st.cmap
-            )
+        def cdf_rows(base: DataFrame | None) -> DataFrame:
             # CHANGE-DATA-FEED sidecar (Delta's cdc files): the commit's
             # logical changes — upserts with payload, deletes as key +
             # null payload — typed and staged alongside, so downstream
             # consumers read the delta instead of re-syncing a snapshot.
-            cdf_rows = changes.withColumn(
+            return changes.withColumn(
                 "_change_type",
                 F.when(op_is_delete, F.lit("delete")).otherwise(F.lit("upsert")),
             ).drop(op_col)
-            cdf_names, _, _, _ = self._stage(cdf_rows)
-            cok = self._disjoint_range_ok(set(touched), pkey, klo, khi, hits=hits)
-            if id_props is not None:
-                # the commit carries the advanced identity watermark: any
-                # intervening properties commit must force a re-derive
-                range_ok = cok
-                cok = lambda m: m.get("properties") is None and range_ok(m)  # noqa: E731
-            try:
-                return self.commit_files(
-                    names, op="cdc", schema_json=schema_json, removes=touched,
-                    expected_version=st.version, stats=stats, parts=parts,
-                    cdf=cdf_names, app_id=app_id, app_version=app_version,
-                    properties=id_props, conflict_ok=cok,
-                )
-            except TxConflictError:
-                continue
-        raise TxConflictError(f"apply_cdc lost {max_retries} consecutive OCC races")
+
+        def attempt(st: _State) -> int:
+            if app_id is not None and app_version is not None:
+                if st.apps.get(app_id, -1) >= app_version:
+                    return st.version
+            return self._upsert(
+                spark, st, "cdc", upserts, key, key_rows, overlaps, stats_cols,
+                cdf_rows, app_id=app_id, app_version=app_version,
+            )
+
+        return self._occ("apply_cdc", max_retries, attempt)
 
     def apply_scd2(
         self,
@@ -2673,44 +2529,24 @@ class TxLog:
         The reference's dim layer is type-1 overwrite
         (DimSinkFunction.java:17-89); this is the history-keeping
         companion, with the batch SCD2 derivation graded separately
-        (operators/scd.py scd2_user_status). File-level like apply_cdc:
-        only files whose [min,max] for `key` contain an update key are
-        rewritten — historical rows ride along untouched inside touched
-        files, files with no updated key survive by name. Serializable
-        via expected_version, retried on conflict."""
-        from bisect import bisect_left
-
+        (operators/scd.py scd2_user_status). File-level like apply_cdc
+        (same key probe): only files whose [min,max] for `key` contain
+        an update key are rewritten — historical rows ride along
+        untouched inside touched files, files with no updated key
+        survive by name. Serializable via expected_version, retried on
+        conflict."""
         stamp_type = dict(updates.dtypes)[from_col]  # to_col shares its domain
-        self._validate(
-            updates.withColumn(to_col, F.lit(None).cast(stamp_type))
-            .withColumn(current_col, F.lit(True))
-        )
-        key_rows = updates.where(F.col(key).isNotNull()).select(key).distinct()
-        keys = sorted(
-            r[0] for r in key_rows.limit(self._CDC_KEYS_MAX + 1).collect()
-        )
-        if not keys:
-            return self.state().version
-        exact = len(keys) <= self._CDC_KEYS_MAX
-        klo, khi = keys[0], keys[-1]
-
-        def hits(mn, mx) -> bool:
-            if not exact:
-                return mn <= khi and mx >= klo
-            i = bisect_left(keys, mn)
-            return i < len(keys) and keys[i] <= mx
-
-        stats_cols = stats_cols if stats_cols is not None else [key]
         new_rows = updates.withColumn(to_col, F.lit(None).cast(stamp_type)).withColumn(
             current_col, F.lit(True)
         )
-        for _ in range(max_retries):
-            st = self.state()
-            pkey = st.cmap.get(key, key)  # stats are keyed by physical name
-            touched = [
-                n for n in st.files
-                if (mm := st.stats.get(n, {}).get(pkey)) is None or hits(mm[0], mm[1])
-            ]
+        self._validate(new_rows)
+        _, overlaps = self._key_probe(updates, key)
+        if overlaps is None:
+            return self.state().version
+
+        def attempt(st: _State) -> int:
+            _, touched = self._classify(st, key, overlaps)
+            merged = new_rows
             if touched:
                 base = self._read_files(spark, touched, st)
                 stamp = updates.select(key, F.col(from_col).alias("_new_from"))
@@ -2726,24 +2562,19 @@ class TxLog:
                         for c in base.columns
                     ]
                 )
-                merged = rewritten.unionByName(new_rows).coalesce(max(1, len(touched)))
-            else:
-                merged = new_rows
+                merged = rewritten.unionByName(new_rows).coalesce(len(touched))
             names, schema_json, stats, parts = self._stage(
-                merged, stats_cols, cmap=st.cmap
+                merged, stats_cols if stats_cols is not None else [key], cmap=st.cmap
             )
-            try:
-                return self.commit_files(
-                    names, op="scd2", schema_json=schema_json, removes=touched,
-                    expected_version=st.version, stats=stats, parts=parts,
-                    conflict_ok=self._disjoint_range_ok(
-                        set(touched), pkey, klo, khi, hits=hits
-                    ),
-                )
-            except TxConflictError:
-                continue
-        raise TxConflictError(f"apply_scd2 lost {max_retries} consecutive OCC races")
+            return self.commit_files(
+                names, op="scd2", schema_json=schema_json, removes=touched,
+                expected_version=st.version, stats=stats, parts=parts,
+                conflict_ok=self._disjoint_range_ok(
+                    set(touched), st.cmap.get(key, key), hits=overlaps
+                ),
+            )
 
+        return self._occ("apply_scd2", max_retries, attempt)
 
     def changes(
         self,
@@ -2763,14 +2594,18 @@ class TxLog:
         exact instead of silently wrong.
 
         ``cdf=True`` additionally adds a ``_change_type`` column and
-        serves ``apply_cdc`` commits from their CHANGE-DATA-FEED sidecar
-        files (Delta's cdc files, staged at commit time): append rows
-        come back as ``insert``, CDC upserts as ``upsert`` with full
-        payload, CDC deletes as ``delete`` with the key and NULL
-        payload. Physical rewrites (replace/merge/optimize/delete/scd2)
-        still raise — they carry no logical-change record. A range whose
-        manifests were truncated raises
-        :class:`TxVersionTruncatedError`."""
+        serves every commit that staged CHANGE-DATA-FEED sidecar files
+        (Delta's cdc files, staged at commit time) from them: append
+        rows come back as ``insert``; ``apply_cdc`` commits (always) as
+        ``upsert`` with full payload and ``delete`` with the key and NULL
+        payload; ``update``, ``delete``, ``delete_to_dv``, ``merge`` and
+        ``merge_into`` commits — staged only while the table has
+        ``enableChangeDataFeed=true`` — as ``update_preimage`` /
+        ``update_postimage`` / ``delete`` / ``insert`` rows. Rewrites
+        without sidecars (replace, optimize, scd2, and the verbs above
+        while the property is off) still raise — they carry no
+        logical-change record. A range whose manifests were truncated
+        raises :class:`TxVersionTruncatedError`."""
         st = self.state()  # schema fallback + existence check
         hi = st.version if to_version is None else to_version
         manifests, _ = self._list_log()
@@ -2785,30 +2620,20 @@ class TxLog:
             m = self.store.read(self._manifest_name(v))
             if cdf and m.get("cdf"):
                 # Any commit that staged typed CDF sidecars serves them:
-                # apply_cdc always; update/delete/delete_to_dv/merge when
-                # the table has enableChangeDataFeed=true (Delta's CDF).
+                # apply_cdc always; update/delete/delete_to_dv/merge/
+                # merge_into when the table has enableChangeDataFeed=true
+                # (Delta's CDF).
                 cdf_df = spark.read.option("mergeSchema", "true").parquet(
                     *[os.path.join(self.data_path, n) for n in m["cdf"]]
                 )
                 # Sidecars are staged under the LOGICAL names current AT
                 # COMMIT TIME — which for a later-renamed column is its
                 # stable physical name, so the physical->logical rename
-                # below translates pre-rename sidecars and leaves
-                # post-rename ones untouched (ADVICE r7: without this a
-                # range crossing a rename served NULLs for the renamed
-                # column in old change rows).
-                for lg, ph in st.cmap.items():
-                    if ph != lg and ph in cdf_df.columns and lg not in cdf_df.columns:
-                        cdf_df = cdf_df.withColumnRenamed(ph, lg)
-                if st.schema_json is not None:
-                    logical = [
-                        f.name
-                        for f in StructType.fromJson(json.loads(st.schema_json)).fields
-                    ]
-                    keep = [c for c in logical if c in cdf_df.columns]
-                    keep += [c for c in ("_change_type",) if c in cdf_df.columns]
-                    if set(cdf_df.columns) - set(keep):  # e.g. dropped column
-                        cdf_df = cdf_df.select(*keep)
+                # translates pre-rename sidecars and leaves post-rename
+                # ones untouched (ADVICE r7: without this a range
+                # crossing a rename served NULLs for the renamed column
+                # in old change rows).
+                cdf_df = self._logical(cdf_df, st, ("_change_type",))
                 frames.append(
                     cdf_df.withColumn("_commit_version", F.lit(v).cast("long"))
                 )
@@ -2841,11 +2666,11 @@ class TxLog:
                 frame = frame.withColumn("_change_type", F.lit("insert"))
             frames.append(frame)
         if not frames:
-            if st.schema_json is None:
+            if st.schema is None:
                 raise ValueError(f"txlog table {self.path!r} has no commits")
-            empty = spark.createDataFrame(
-                [], StructType.fromJson(json.loads(st.schema_json))
-            ).withColumn("_commit_version", F.lit(None).cast("long"))
+            empty = spark.createDataFrame([], st.schema).withColumn(
+                "_commit_version", F.lit(None).cast("long")
+            )
             if cdf:
                 empty = empty.withColumn("_change_type", F.lit(None).cast("string"))
             return empty
@@ -2929,8 +2754,8 @@ class TxLog:
         cluster_cols = (
             [cluster_by] if isinstance(cluster_by, str) else list(cluster_by or [])
         )
-        for _ in range(max_retries):
-            st = self.state()
+
+        def attempt(st: _State) -> int:
             if len(st.files) <= max_files and not cluster_cols:
                 return st.version
             victims = list(st.files)
@@ -2944,10 +2769,7 @@ class TxLog:
             # (dropped columns have no logical name and lose their stats
             # with the rewrite, correctly — their data is gone too).
             inv = {ph: lg for lg, ph in st.cmap.items()}
-            logical_cols = {
-                f.name
-                for f in StructType.fromJson(json.loads(st.schema_json)).fields
-            } if st.schema_json else set()
+            logical_cols = set(st.schema.fieldNames()) if st.schema else set()
 
             def to_logical(c: str) -> str | None:
                 lg = inv.get(c, c)
@@ -3020,20 +2842,18 @@ class TxLog:
                 packed, sc, bloom_cols=bloom_cols or None, cmap=st.cmap,
                 partition_by=pcols or None,
             )
-            try:
-                # DV-race guard (ADVICE r7): compaction folds DVs away by
-                # rewriting from the files' read-time contents, so a DV
-                # attached AFTER the read must conflict or its deletions
-                # would resurrect in the packed files. Appends stay benign
-                # — compaction runs alongside ingestion.
-                return self.commit_files(
-                    names, op="optimize", schema_json=schema_json, removes=victims,
-                    stats=stats, parts=parts, expected_version=st.version,
-                    conflict_ok=self._rewrite_safe_ok(set(victims)),
-                )
-            except TxConflictError:
-                continue  # another remover won; re-derive and retry
-        raise TxConflictError(f"optimize lost {max_retries} consecutive OCC races")
+            # DV-race guard (ADVICE r7): compaction folds DVs away by
+            # rewriting from the files' read-time contents, so a DV
+            # attached AFTER the read must conflict or its deletions would
+            # resurrect in the packed files. Appends stay benign —
+            # compaction runs alongside ingestion.
+            return self.commit_files(
+                names, op="optimize", schema_json=schema_json, removes=victims,
+                stats=stats, parts=parts, expected_version=st.version,
+                conflict_ok=self._disjoint_range_ok(set(victims)),
+            )
+
+        return self._occ("optimize", max_retries, attempt)
 
     @staticmethod
     def _zvalue(df: DataFrame, cols: list[str]) -> "F.Column":

@@ -203,7 +203,13 @@ def route_micro_batch(
     is skipped by the log), `dim` entries MERGE keyed by the entry's
     sink_pk (idempotent by construction: replaying the same updates yields
     the same keyed state). Two configs may share a sink_table — their
-    distinct per-entry app_ids commit independently."""
+    distinct per-entry app_ids commit independently.
+
+    Known defect: `merge` takes one row per key, but a micro-batch that
+    carries two `update` rows for one dim key hands it both, and the dim
+    keeps both rows. The ODS envelope has no order column to pick the
+    key's last change by, so the fix waits for one
+    (tests/test_cdc_pipeline.py, the strict-xfail dim test)."""
     if len(configs) > 2:
         batch = batch.persist()
     written = []

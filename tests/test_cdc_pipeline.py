@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_real_time_data_warehouse_spark.sources.cdc import (
@@ -74,6 +75,36 @@ def test_cdc_route_to_facts_and_dims(spark, tmp_path):
     # dedup is the caller's contract violation, not the router's)
     route_micro_batch(flat, configs[:1], sinks, epoch_id=1)
     assert read_sink(spark, sinks, "dwd_order_info").count() == 2 * facts.count()
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="the ODS envelope has no order column to pick a key's last update, "
+    "so a batch with two updates of one dim key merges both rows",
+)
+def test_dim_sink_keeps_one_row_per_key_when_a_batch_updates_it_twice(spark, tmp_path):
+    """Known router defect: `merge` takes one row per key, but a
+    micro-batch carrying two `update` rows for one dim key hands it both,
+    and the dim keeps both."""
+    cols = ("id", "name")
+    configs = [
+        RouteConfig("user_info", op, "dim_user_info", cols, sink_type="dim", sink_pk="id")
+        for op in ("insert", "update")
+    ]
+    schema = "source_table string, op string, id long, name string"
+    sinks = str(tmp_path / "sinks")
+    route_micro_batch(
+        spark.createDataFrame([("user_info", "insert", 1, "a")], schema), configs, sinks,
+        epoch_id=0,
+    )
+    route_micro_batch(
+        spark.createDataFrame(
+            [("user_info", "update", 1, "b"), ("user_info", "update", 1, "c")], schema
+        ),
+        configs, sinks, epoch_id=1,
+    )
+    rows = read_sink(spark, sinks, "dim_user_info", "dim").collect()
+    assert len(rows) == 1, sorted(tuple(r) for r in rows)
 
 
 def test_apply_cdc_changes_seq_guard_blocks_stale_writes(spark, tmp_path):

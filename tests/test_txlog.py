@@ -2711,3 +2711,44 @@ def test_optimize_sample_conf_never_leaks_to_caller(tmp_path, spark):
     assert sorted(r["id"] for r in log.snapshot(spark).collect()) == list(
         range(8000)
     )
+
+
+def test_row_level_verbs_job_counts(tmp_path, spark):
+    """The Spark jobs one append, one merge and one apply_cdc run on a
+    small stats-keyed table, pinned: the router's dim merge and the CDC
+    sink run these verbs every micro-batch, so a job added to the
+    shared commit core (the key probe, the upsert rewrite) shows here."""
+    from .test_plan_shape import jobs_run_by
+
+    log = TxLog(str(tmp_path / "t"))
+    rows = spark.createDataFrame([(k, 0) for k in range(10)], "k long, v long").coalesce(1)
+    upd = spark.createDataFrame([(3, 33), (20, 1)], "k long, v long")
+    ch = spark.createDataFrame([(5, 55, "u"), (7, None, "d")], "k long, v long, op string")
+    jobs = [
+        len(jobs_run_by(spark, "txlog:append", lambda: log.append(rows, stats_cols=["k"]))),
+        len(jobs_run_by(spark, "txlog:merge", lambda: log.merge(spark, upd, "k"))),
+        len(jobs_run_by(spark, "txlog:apply_cdc", lambda: log.apply_cdc(spark, ch, "k"))),
+    ]
+    assert jobs == [1, 7, 10], f"append/merge/apply_cdc ran {jobs} Spark jobs"
+    got = {r["k"]: r["v"] for r in log.snapshot(spark).collect()}
+    assert got == {**{k: 0 for k in range(10) if k != 7}, 3: 33, 5: 55, 20: 1}
+
+
+def test_key_probe_past_the_cap_bounds_every_key(tmp_path, spark):
+    """Past `_CDC_KEYS_MAX` the key probe degrades to a range, and that
+    range must bound EVERY change key, not only the collected ones: with
+    a cap of 0 a single key is collected, yet the changes to keys held
+    by the other files must still replace or delete their rows."""
+    log = TxLog(str(tmp_path / "t"))
+    for lo in (0, 10, 20):
+        log.append(
+            spark.range(lo, lo + 10).selectExpr("id AS k", "0L AS v").coalesce(1),
+            stats_cols=["k"],
+        )
+    log._CDC_KEYS_MAX = 0
+    ch = spark.createDataFrame(
+        [(5, 5, "u"), (25, 25, "u"), (15, None, "d")], "k long, v long, op string"
+    )
+    log.apply_cdc(spark, ch, "k")
+    got = sorted((r["k"], r["v"]) for r in log.snapshot(spark).collect())
+    assert got == [(k, k if k in (5, 25) else 0) for k in range(30) if k != 15]
