@@ -333,6 +333,21 @@ def _in_range(lo, hi):
     return lambda mn, mx: mn <= hi and mx >= lo
 
 
+#: Spark's inferred read schema of a data-file set, keyed by the session
+#: confs that shape parquet schema inference, the merge flag, and the
+#: footers inference reads (see TxLog._read_files). Cleared when full.
+_READ_SCHEMAS: dict = {}
+_READ_SCHEMAS_MAX = 4096
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+#: a deletion-vector sidecar's rows: (data file name, deleted row position)
+_DV_SCHEMA = "file string, pos long"
+
+
 @dataclass(frozen=True)
 class _State:
     version: int  # -1 => empty table, no commits yet
@@ -972,9 +987,25 @@ class TxLog:
             return spark.createDataFrame([], st.schema)
         merge_schema = merge_schema or positions
         reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
+        confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+
+        def parquet(names: list[str]) -> DataFrame:
+            # Spark infers a read schema with a job: the footer of the
+            # least path, or every footer under mergeSchema. Data files
+            # never change once written, so that is done once per file set.
+            paths = [os.path.join(self.data_path, n) for n in names]
+            key = (confs, merge_schema, tuple(sorted(paths)) if merge_schema else min(paths))
+            schema = _READ_SCHEMAS.get(key)
+            if schema is not None:
+                return reader.schema(schema).parquet(*paths)
+            df = reader.parquet(*paths)
+            if len(_READ_SCHEMAS) >= _READ_SCHEMAS_MAX:
+                _READ_SCHEMAS.clear()
+            _READ_SCHEMAS[key] = df.schema
+            return df
 
         def with_pos(names: list[str]) -> DataFrame:
-            g = reader.parquet(*[os.path.join(self.data_path, n) for n in names])
+            g = parquet(names)
             return g.select(
                 *g.columns,  # _metadata is hidden: capture the data columns
                 F.element_at(
@@ -991,9 +1022,9 @@ class TxLog:
             plain = [n for n in names if n not in st.dvs]
             dvd = [n for n in names if n in st.dvs]
             if plain:
-                out.append(reader.parquet(*[os.path.join(self.data_path, n) for n in plain]))
+                out.append(parquet(plain))
             if dvd:
-                side = spark.read.parquet(
+                side = spark.read.schema(_DV_SCHEMA).parquet(
                     *sorted({os.path.join(self.data_path, st.dvs[n]) for n in dvd})
                 ).select(
                     F.col("file").alias("_dv_file"), F.col("pos").alias("_dv_pos")
@@ -1698,7 +1729,7 @@ class TxLog:
                 prior = sorted({st.dvs[n] for n in dv_targets if n in st.dvs})
                 carried = None
                 if prior:
-                    carried = spark.read.parquet(
+                    carried = spark.read.schema(_DV_SCHEMA).parquet(
                         *[os.path.join(self.data_path, s) for s in prior]
                     ).where(F.col("file").isin(dv_targets))
                     # rows a prior vector already deleted are not NEW
