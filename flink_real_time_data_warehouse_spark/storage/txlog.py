@@ -333,17 +333,6 @@ def _in_range(lo, hi):
     return lambda mn, mx: mn <= hi and mx >= lo
 
 
-#: Spark's inferred read schema of a data-file set, keyed by the session
-#: confs that shape parquet schema inference, the merge flag, and the
-#: footers inference reads (see TxLog._read_files). Cleared when full.
-_READ_SCHEMAS: dict = {}
-_READ_SCHEMAS_MAX = 4096
-_SCHEMA_CONFS = (
-    "spark.sql.parquet.binaryAsString",
-    "spark.sql.parquet.int96AsTimestamp",
-    "spark.sql.parquet.inferTimestampNTZ.enabled",
-    "spark.sql.legacy.parquet.nanosAsLong",
-)
 #: a deletion-vector sidecar's rows: (data file name, deleted row position)
 _DV_SCHEMA = "file string, pos long"
 
@@ -672,6 +661,8 @@ class TxLog:
                 continue
         raise TxConflictError(f"{op} lost {max_retries} consecutive OCC races")
 
+    _CDC_KEYS_MAX = 10_000  # above this, the key probe is a [min, max] range
+
     def _key_probe(self, keyed: DataFrame, key: str):
         """``(key_rows, overlaps)`` for the keyed verbs (merge,
         merge_into, apply_cdc, apply_scd2): the distinct non-null keys of
@@ -679,10 +670,11 @@ class TxLog:
         key range is [mn, mx] can hold one of them. Up to `_CDC_KEYS_MAX`
         keys are collected sorted and each range is probed by binary
         search, so a batch touching low and high keys does not rewrite
-        every file between (a change batch is bounded by ingest rate,
-        so the collect is small by construction). Beyond the cap the
-        probe degrades to the keys' true [min, max]. ``overlaps`` is
-        None when `keyed` holds no non-null key."""
+        every file between. The cap keeps the driver-side collect at
+        micro-batch size (a router dim batch, a CDC epoch); past it — a
+        fact-scale merge — the probe is the keys' true [min, max], one
+        aggregate. ``overlaps`` is None when `keyed` holds no non-null
+        key."""
         key_rows = keyed.where(F.col(key).isNotNull()).select(key).distinct()
         keys = sorted(r[0] for r in key_rows.limit(self._CDC_KEYS_MAX + 1).collect())
         if not keys:
@@ -987,22 +979,9 @@ class TxLog:
             return spark.createDataFrame([], st.schema)
         merge_schema = merge_schema or positions
         reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
-        confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
 
         def parquet(names: list[str]) -> DataFrame:
-            # Spark infers a read schema with a job: the footer of the
-            # least path, or every footer under mergeSchema. Data files
-            # never change once written, so that is done once per file set.
-            paths = [os.path.join(self.data_path, n) for n in names]
-            key = (confs, merge_schema, tuple(sorted(paths)) if merge_schema else min(paths))
-            schema = _READ_SCHEMAS.get(key)
-            if schema is not None:
-                return reader.schema(schema).parquet(*paths)
-            df = reader.parquet(*paths)
-            if len(_READ_SCHEMAS) >= _READ_SCHEMAS_MAX:
-                _READ_SCHEMAS.clear()
-            _READ_SCHEMAS[key] = df.schema
-            return df
+            return reader.parquet(*[os.path.join(self.data_path, n) for n in names])
 
         def with_pos(names: list[str]) -> DataFrame:
             g = parquet(names)
@@ -1146,7 +1125,7 @@ class TxLog:
         """Type-1 upsert (MERGE) as lock-free OCC read-modify-write with
         FILE-LEVEL rewrite — the upsert-only case of :meth:`apply_cdc`'s
         keyed-upsert core: only data files whose recorded [min, max] for
-        `key` holds one of the update keys (the exact-key probe) are
+        `key` holds one of the update keys (:meth:`_key_probe`) are
         read, anti-joined against the update keys, and rewritten; other
         files survive the commit untouched (same names in the manifest)
         — O(touched bytes) per merge, not O(table), which is what lets a
@@ -1203,11 +1182,8 @@ class TxLog:
                 )
                 return pre.unionByName(post).unionByName(ins).coalesce(1)
 
-            # updates.coalesce(1): a merge that touches no file (new keys
-            # only) lands one file, not one per shuffle partition
             return self._upsert(
-                spark, st, "merge", updates.coalesce(1), key, key_rows, overlaps,
-                stats_cols, cdf_rows,
+                spark, st, "merge", updates, key, key_rows, overlaps, stats_cols, cdf_rows
             )
 
         return self._occ("merge", max_retries, attempt)
@@ -1261,9 +1237,10 @@ class TxLog:
             )
         merged, id_props = self._apply_identity(merged, st.props, None, fill_nulls=True)
         # Rewrite volume ~= touched volume: keep file granularity stable
-        # (no per-commit small-file explosion from shuffle partitioning).
-        if touched:
-            merged = merged.coalesce(len(touched))
+        # (no per-commit small-file explosion from shuffle partitioning);
+        # a merge that touches no file (new keys only) lands one file.
+        if touched or op == "merge":
+            merged = merged.coalesce(max(1, len(touched)))
         names, schema_json, stats, parts = self._stage(
             merged, stats_cols if stats_cols is not None else [key], cmap=st.cmap
         )
@@ -2455,7 +2432,6 @@ class TxLog:
                 )
         return df
 
-    _CDC_KEYS_MAX = 1_000_000  # above this, fall back to coarse range pruning
 
     def apply_cdc(
         self,
@@ -2479,8 +2455,9 @@ class TxLog:
         same manifest.
 
         File-level, classified against the EXACT change-key set, not its
-        [min,max] envelope (:meth:`_key_probe` — a CDC batch touching
-        low and high keys would otherwise rewrite every file between).
+        [min,max] envelope (:meth:`_key_probe`, up to `_CDC_KEYS_MAX`
+        keys — a CDC batch touching low and high keys would otherwise
+        rewrite every file between).
         Files no change key lands in survive untouched (same names).
         Serializable via expected_version, retried on conflict. With
         (app_id, app_version) the apply is an idempotent streaming-epoch

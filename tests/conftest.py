@@ -18,12 +18,6 @@ from flink_real_time_data_warehouse_spark.tables import TABLE_NAMES
 TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
-# The suite reads KB-scale inputs, but under get_spark's 24g default heap
-# the driver JVM grew to about 9 GB RSS over a full run, on machines it
-# shares with other work. 2g measured as fast on the txlog and operator
-# tests; the `perfbench` workloads run in 1g.
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "2g")
-
 
 @pytest.fixture(scope="session")
 def spark():
