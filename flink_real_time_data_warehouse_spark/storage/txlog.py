@@ -333,10 +333,6 @@ def _in_range(lo, hi):
     return lambda mn, mx: mn <= hi and mx >= lo
 
 
-#: a deletion-vector sidecar's rows: (data file name, deleted row position)
-_DV_SCHEMA = "file string, pos long"
-
-
 @dataclass(frozen=True)
 class _State:
     version: int  # -1 => empty table, no commits yet
@@ -1003,7 +999,7 @@ class TxLog:
             if plain:
                 out.append(parquet(plain))
             if dvd:
-                side = spark.read.schema(_DV_SCHEMA).parquet(
+                side = spark.read.parquet(
                     *sorted({os.path.join(self.data_path, st.dvs[n]) for n in dvd})
                 ).select(
                     F.col("file").alias("_dv_file"), F.col("pos").alias("_dv_pos")
@@ -1706,7 +1702,7 @@ class TxLog:
                 prior = sorted({st.dvs[n] for n in dv_targets if n in st.dvs})
                 carried = None
                 if prior:
-                    carried = spark.read.schema(_DV_SCHEMA).parquet(
+                    carried = spark.read.parquet(
                         *[os.path.join(self.data_path, s) for s in prior]
                     ).where(F.col("file").isin(dv_targets))
                     # rows a prior vector already deleted are not NEW
