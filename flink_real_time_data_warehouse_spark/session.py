@@ -49,6 +49,12 @@ _RUNTIME_CONF = {
     # are dropped before the exchange. Pinned by
     # tests/test_plan_shape.py::test_runtime_bloom_filter_injected.
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    # List explicit file sets on the driver. Past this many paths Spark
+    # lists them through a job with one task per path: a file stream
+    # micro-batch of 40 new files, or a TxLog read of 40 data files. On
+    # local[N] those tasks run in the driver's JVM against the same
+    # filesystem, so the job adds scheduling cost and no parallel I/O.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "2147483647",
 }
 
 # Size shuffles to the machine instead of the 200-partition default — AQE

@@ -718,6 +718,29 @@ def test_concurrent_stream_starts_restore_session_conf(spark, tmp_path):
     assert drain_pending_bytes() == 0  # the legs' sources stay in their threads
 
 
+def test_stream_dir_backlog_lists_files_on_the_driver(spark, tmp_path):
+    """A micro-batch over a 40-file backlog runs no Spark job of its own:
+    past Spark's parallel-discovery threshold (32 paths by default) the
+    file source's explicit path list would be listed by a job with one
+    task per file; the session lists it on the driver instead."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_real_time_data_warehouse_spark.session import start_foreach_batch
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(40):
+        pq.write_table(pa.table({"id": pa.array([i], pa.int64())}), str(src / f"f{i:02d}.parquet"))
+    batches = []
+    q = start_foreach_batch(stream_dir(spark, str(src), "id long"),
+                            lambda df, epoch: batches.append(epoch), str(tmp_path / "ck"))
+    q.awaitTermination()
+    assert batches == [0]
+    jobs = list(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert jobs == [], f"the micro-batch ran {len(jobs)} Spark job(s)"
+
+
 def test_tune_session_keeps_explicit_stock_shuffle_partitions(spark):
     """An explicit spark.sql.shuffle.partitions=200 is a caller's choice,
     not the unset stock default: tune_session must leave it alone."""

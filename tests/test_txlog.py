@@ -2734,6 +2734,22 @@ def test_row_level_verbs_job_counts(tmp_path, spark):
     assert got == {**{k: 0 for k in range(10) if k != 7}, 3: 33, 5: 55, 20: 1}
 
 
+def test_snapshot_of_many_files_lists_them_on_the_driver(tmp_path, spark):
+    """Building a snapshot over 40 data files runs one Spark job, the
+    read's schema inference. Past Spark's parallel-discovery threshold
+    (32 paths by default) an explicit path list is listed by a job with
+    one task per path; the session lists it on the driver instead."""
+    from .test_plan_shape import jobs_run_by
+
+    log = TxLog(str(tmp_path / "t"))
+    for i in range(40):
+        log.commit_files(_stage_rows(log, [i]), schema_json=_SCHEMA_JSON)
+    holder = {}
+    jobs = jobs_run_by(spark, "txlog:snapshot40", lambda: holder.setdefault("df", log.snapshot(spark)))
+    assert len(jobs) == 1, f"snapshot over 40 files ran {len(jobs)} Spark jobs"
+    assert sorted(r["id"] for r in holder["df"].collect()) == list(range(40))
+
+
 def test_key_probe_past_the_cap_bounds_every_key(tmp_path, spark):
     """Past `_CDC_KEYS_MAX` the key probe degrades to a range, and that
     range must bound EVERY change key, not only the collected ones: with
