@@ -10,7 +10,7 @@ a Flink 1.12 gmall pipeline), re-expressed Spark-first:
 - dimension enrichment is a broadcast join of dim snapshots (the reference
   hand-rolls async Phoenix lookups behind a Redis cache),
 - stateful stream operators (UV dedup, new-user fix, CEP bounce) are
-  ``transformWithState``/window-function formulations,
+  ``applyInPandasWithState``/window-function formulations,
 - plus first-class large-scale training-data operators (dedup family,
   similarity search, text analysis, multimodal columns) the reference lacks.
 

@@ -789,7 +789,7 @@ def new_user_fix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # bounce_events — SURVEY §2.6 T3 (UserJumpDetailApp.java:81-120): CEP bounce
 # detection. Batch semantics: session-start (gap > 6h) with no follow-up
-# within the timeout. Streaming impl: streaming/state.py (transformWithState).
+# within the timeout. Streaming impl: streaming/state.py (applyInPandasWithState).
 # ---------------------------------------------------------------------------
 @register(
     "bounce_events",

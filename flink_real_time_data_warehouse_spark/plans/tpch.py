@@ -2267,16 +2267,14 @@ def txlog_stream_format_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def run(ck: str) -> None:
         from ..session import stream_start_conf
-        from ..sources.streams import _note_src_bytes
 
-        _note_src_bytes(ods.path)  # txlog source: size the stream to the table
         src = (
             spark.readStream.format("txlog")
             .option("path", ods.path)
             .load()
             .drop("_commit_version")
         )
-        with stream_start_conf(spark, df=src):
+        with stream_start_conf(src):
             q = (
                 src.writeStream.format("txlog")
                 .option("path", sink_path)

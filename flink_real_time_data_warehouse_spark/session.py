@@ -117,14 +117,49 @@ STREAM_PART_BYTES = 32 * 1024 * 1024
 _HEAVY_PLAN_CHARS = 20_000
 
 
-def stream_partitions(spark: SparkSession, src_bytes: int | None, df=None) -> int:
-    """Shuffle/state partition count for ONE streaming query (guide
-    §2.1/§2.2 applied to micro-batches). Every stateful operator writes
-    one state-store delta file per shuffle partition per trigger and AQE
-    cannot coalesce streaming state, so the machine-wide count (32 here)
-    pays 32 state files per operator per trigger even when a trigger
-    carries a few MB — but blanket downsizing was MEASURED to hurt two
-    operator classes, so the rule is class-aware (all thresholds from
+def _source_bytes(plan) -> int:
+    """Bytes of the files a streaming plan reads: for each
+    StreamingRelation/StreamingRelationV2 leaf, the files under its `path`
+    option whose names match its `pathGlobFilter`."""
+    import fnmatch
+
+    total = 0
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "StreamingRelation":
+            opts = leaf.dataSource().caseInsensitiveOptions()
+            path, glob = (opts.apply(k) if opts.contains(k) else None
+                          for k in ("path", "pathGlobFilter"))
+        elif leaf.nodeName() == "StreamingRelationV2":
+            opts = leaf.extraOptions()
+            path, glob = opts.get("path"), opts.get("pathGlobFilter")
+        else:
+            continue
+        if not path:
+            continue
+        if os.path.isfile(path):
+            files = [path]
+        else:
+            files = [os.path.join(r, f) for r, _, fs in os.walk(path) for f in fs]
+        for f in files:
+            if fnmatch.fnmatchcase(os.path.basename(f), glob or "*"):
+                try:
+                    total += os.path.getsize(f)
+                except OSError:  # removed since the walk listed it
+                    pass
+    return total
+
+
+def stream_partitions(df: DataFrame) -> int:
+    """Shuffle/state partition count for starting the streaming query
+    over `df` (guide §2.1/§2.2 applied to micro-batches), sized from the
+    source files its own plan reads. Every stateful operator writes one
+    state-store delta file per shuffle partition per trigger and AQE
+    cannot coalesce streaming state, so the session's count (one per
+    core) pays that many state files per operator per trigger even when a
+    trigger carries a few MB — but blanket downsizing was MEASURED to hurt
+    two operator classes, so the rule is class-aware (all thresholds from
     same-window min-of-3 sweeps at sf0.1, r14):
 
     - Python-stateful / pandas plans (applyInPandasWithState etc.): the
@@ -144,24 +179,28 @@ def stream_partitions(spark: SparkSession, src_bytes: int | None, df=None) -> in
       dwd_chain 10.0 -> 8.4 s).
     - Large stateful aggs (big source, no stream-stream join): group
       state is wide and partial aggregation wants parallelism
-      (product_stats_stream 9.9 -> 14.4 s at 2 parts). KEEP."""
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if not src_bytes:
-        return cur
+      (product_stats_stream 9.9 -> 14.4 s at 2 parts). KEEP.
+
+    The plan analysis and the directory walk run before the start lock;
+    only the read of the session's count waits for it."""
     import math
 
-    sized = max(2, min(cur, math.ceil(src_bytes / STREAM_PART_BYTES)))
-    if df is None:
-        return sized
     try:
-        plan = df._jdf.queryExecution().analyzed().toString()
+        plan = df._jdf.queryExecution().analyzed()
+        text = plan.toString()
+        src_bytes = _source_bytes(plan)
     except Exception:
+        src_bytes = 0
+    with _STREAM_START_LOCK:  # another start may hold its own count in the conf
+        cur = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if not src_bytes:
         return cur
-    if "Python" in plan or "Pandas" in plan:
+    if "Python" in text or "Pandas" in text:
         return cur
-    if len(plan) > _HEAVY_PLAN_CHARS:
+    if len(text) > _HEAVY_PLAN_CHARS:
         return cur
-    if plan.count("EventTimeWatermark") >= 2 and "Join" in plan:
+    sized = max(2, min(cur, math.ceil(src_bytes / STREAM_PART_BYTES)))
+    if text.count("EventTimeWatermark") >= 2 and "Join" in text:
         return sized
     if src_bytes <= 4 * 1024 * 1024:
         return max(2, min(cur, math.ceil(src_bytes / (1024 * 1024))))
@@ -175,29 +214,21 @@ _STREAM_START_LOCK = threading.RLock()
 
 
 @contextmanager
-def stream_start_conf(spark: SparkSession, src_bytes: int | None = None, df=None):
-    """Set spark.sql.shuffle.partitions for a streaming query START and
-    restore it immediately after. StreamExecution clones the session at
-    start (sparkSessionForStream = sparkSession.cloneSession()), so the
-    value in force AT start is frozen into every micro-batch of that
-    query — including its state-store partition count, recorded in the
-    checkpoint metadata — and the restore cannot race the stream.
+def stream_start_conf(df: DataFrame):
+    """Set spark.sql.shuffle.partitions for starting the streaming query
+    over `df` and restore it immediately after. StreamExecution clones the
+    session at start (sparkSessionForStream = sparkSession.cloneSession()),
+    so the value in force AT start is frozen into every micro-batch of
+    that query — including its state-store partition count, recorded in
+    the checkpoint metadata — and the restore cannot race the stream.
 
-    The source volume comes from sources.streams' pending-bytes note
-    (each stream_table/stream_dir records its file sizes in the calling
-    thread; draining at start sums the sources this thread built for
-    THIS query — a drained total that ever includes a stray never-started
-    source only mis-sizes a heuristic). One module lock is held from the
-    drain through the restore, so concurrent starts on one session
+    The count comes from stream_partitions(df). One module lock is held
+    from the set through the restore, so concurrent starts on one session
     (e.g. a router and a DWS leg started from two threads) each freeze
     their own count and the session's value is always put back."""
-    from .sources import streams  # local import: streams imports this module
-
+    spark = df.sparkSession
+    n = stream_partitions(df)
     with _STREAM_START_LOCK:
-        drained = streams.drain_pending_bytes()
-        n = stream_partitions(
-            spark, src_bytes if src_bytes is not None else drained, df=df
-        )
         old = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(n))
         try:
@@ -212,7 +243,7 @@ def start_foreach_batch(
     """Start `on_batch` as an availableNow foreachBatch query over
     `stream`, its shuffle/state partitions sized by stream_start_conf.
     Returns the StreamingQuery."""
-    with stream_start_conf(stream.sparkSession, df=stream):
+    with stream_start_conf(stream):
         return (
             stream.writeStream.foreachBatch(on_batch)
             .option("checkpointLocation", checkpoint)

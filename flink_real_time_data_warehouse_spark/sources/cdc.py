@@ -26,7 +26,6 @@ from pyspark.sql.types import MapType, StringType, StructField, StructType
 
 from ..session import mkscratch, start_foreach_batch
 from ..storage import TxLog
-from .streams import _note_src_bytes
 
 
 def cdc_schema() -> StructType:
@@ -157,7 +156,6 @@ def cdc_initial_load(
             changes = changes.where(F.col(seq_col) > F.lit(seq_floor))
         apply_cdc_changes(log, changes, key, seq_col=seq_col)
 
-    _note_src_bytes(cdc_dir)
     src = spark.readStream.text(cdc_dir)
     start_foreach_batch(
         src, on_batch, checkpoint or mkscratch(prefix="ckpt_cdc_")

@@ -17,49 +17,12 @@ topology lacks.
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import tune_session
 from ..tables import TABLE_NAMES, footer_schema, nanos_to_micros
-
-# Source bytes of streams built since the last drain — the sizing input
-# for session.stream_start_conf (stream shuffle/state partitions derive
-# from source volume, guide §2.2). Kept per thread: construction and
-# start are sequential within a thread, so draining at start sums exactly
-# this query's sources even while another thread builds and starts its
-# own query on the same session.
-class _Pending(threading.local):
-    def __init__(self):
-        self.bytes: list[int] = []
-
-
-_PENDING = _Pending()
-
-
-def _note_src_bytes(path: str) -> None:
-    try:
-        if os.path.isdir(path):
-            n = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(path)
-                for f in fs
-            )
-        else:
-            n = os.path.getsize(path)
-    except OSError:
-        return
-    _PENDING.bytes.append(n)
-
-
-def drain_pending_bytes() -> int:
-    """Total source bytes this thread noted since its last drain (then
-    reset)."""
-    total = sum(_PENDING.bytes)
-    _PENDING.bytes.clear()
-    return total
 
 
 def stream_table(
@@ -81,7 +44,6 @@ def stream_table(
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    _note_src_bytes(path)
     return nanos_to_micros(reader.load(sf_dir), nanos)
 
 
@@ -96,7 +58,6 @@ def stream_dir(
     reader = spark.readStream.format("parquet").schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    _note_src_bytes(directory)
     return reader.load(directory)
 
 

@@ -119,7 +119,7 @@ def run_to_parquet(df: DataFrame, path: str) -> None:
     parquet directory — the DWD-layer handoff between chained streaming
     apps (the reference passes dwd_* Kafka topics between apps;
     OrderWideApp -> dwm_payment_wide consumers)."""
-    with stream_start_conf(df.sparkSession, df=df):
+    with stream_start_conf(df):
         q = (
             df.writeStream.format("parquet")
             .option("path", path)
@@ -143,7 +143,7 @@ def run_to_memory(df: DataFrame, spark: SparkSession, output_mode: str = "append
     name = "mem_" + uuid.uuid4().hex[:12]
     # Stream shuffle/state partitions sized to this query's source volume
     # (session.stream_start_conf — guide §2.1/§2.2 for micro-batches).
-    with stream_start_conf(spark, df=df):
+    with stream_start_conf(df):
         q = (
             df.writeStream.format("memory")
             .queryName(name)

@@ -261,235 +261,6 @@ def bounce_stream(
     )
 
 
-def bounce_stream_tws(events: DataFrame, gap_s: int, timeout_s: int) -> DataFrame:
-    """T3 bounce CEP on `transformWithStateInPandas` — Spark 4.x's
-    successor to applyInPandasWithState, ported from bounce_stream (the
-    hardest of the T1-T3 family: an event-time timer plus two emission
-    paths) with identical semantics, graded against the same oracle.
-
-    API differences handled here:
-    - the old single setTimeoutTimestamp becomes explicit registerTimer/
-      deleteTimer calls — the processor tracks its live timer in state
-      and deletes it before re-registering, so a resolved pending start
-      can never be re-emitted by a stale timer;
-    - timer firing arrives through handleExpiredTimer (with the expiry
-      echoed back) instead of a hasTimedOut flag, and the emission is
-      double-checked against state (pending set AND the expiry matches
-      the tracked timer) — spurious or stale expirations are no-ops;
-    - state is a named ValueState on the handle (multiple named states
-      and TTLs are available; one suffices here) rather than the single
-      implicit per-key tuple.
-    """
-    if timeout_s > gap_s:
-        raise ValueError(
-            f"bounce timeout_s ({timeout_s}) must be <= session gap_s ({gap_s})"
-        )
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _Bounce(StatefulProcessor):
-        def __init__(self, gap: int, timeout: int):
-            self._gap_us = gap * 1_000_000
-            self._timeout_us = timeout * 1_000_000
-
-        def init(self, handle):
-            self._handle = handle
-            self._state = handle.getValueState(
-                "bounce",
-                "prev_us long, pending integer, pending_id long, timer_ms long",
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            st = self._state.get()
-            prev_us, pending, pending_id, timer_ms = (
-                st if st is not None else (None, 0, None, None)
-            )
-            out = []
-            data = pd.concat(list(rows)).sort_values(["ts", "event_id"])
-            for r in data.itertuples(index=False):
-                ts_us = r.ts.value // 1000  # pandas ns -> us
-                if pending:
-                    if ts_us - prev_us > self._timeout_us:
-                        out.append(
-                            (pending_id, key[0], pd.Timestamp(prev_us, unit="us"))
-                        )
-                    pending, pending_id = 0, None
-                is_start = prev_us is None or ts_us - prev_us > self._gap_us
-                if is_start:
-                    pending, pending_id = 1, int(r.event_id)
-                prev_us = ts_us
-            if timer_ms is not None:
-                self._handle.deleteTimer(timer_ms)
-                timer_ms = None
-            if pending:
-                wm = timerValues.getCurrentWatermarkInMs()
-                timer_ms = max(prev_us // 1000 + self._timeout_us // 1000, wm + 1)
-                self._handle.registerTimer(timer_ms)
-            self._state.update((prev_us, pending, pending_id, timer_ms))
-            yield pd.DataFrame(out, columns=["event_id", "user_id", "ts"])
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            import pandas as pd
-
-            out = []
-            st = self._state.get()
-            if st is not None:
-                prev_us, pending, pending_id, timer_ms = st
-                if pending and timer_ms == expiredTimerInfo.getExpiryTimeInMs():
-                    out.append(
-                        (pending_id, key[0], pd.Timestamp(prev_us, unit="us"))
-                    )
-                    # keep prev_us for future gap calc, same as bounce_stream
-                    self._state.update((prev_us, 0, None, None))
-            yield pd.DataFrame(out, columns=["event_id", "user_id", "ts"])
-
-        def close(self):
-            pass
-
-    return (
-        events.select("event_id", "user_id", "ts")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_Bounce(gap_s, timeout_s),
-            outputStructType=EVENT_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
-def uv_dedup_stream_tws(events: DataFrame, evict_after_days: int = 2) -> DataFrame:
-    """T2 daily-first-visit dedup on `transformWithStateInPandas` — the
-    second TWS port (after bounce_stream_tws), chosen because it
-    exercises the other stateful shape: a LONG-LIVED two-long state
-    (newest epoch-day + 63-day seen-bitmask, identical semantics and
-    oracle to uv_dedup_stream) with a rolling event-time EVICTION timer
-    rather than the CEP's emit-on-timeout. API mapping, same as the
-    bounce port: explicit registerTimer/deleteTimer with the live timer
-    tracked in state (a re-registered horizon deletes the stale timer
-    first), and handleExpiredTimer clears the key's state entirely —
-    once the watermark is `evict_after_days` past a key's newest day,
-    any admissible future event necessarily opens a new day, so the
-    state carries no information worth keeping."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _Uv(StatefulProcessor):
-        def __init__(self, evict: int):
-            self._evict = evict
-
-        def init(self, handle):
-            self._handle = handle
-            self._state = handle.getValueState(
-                "uv", "max_day long, mask long, timer_ms long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            st = self._state.get()
-            max_day, mask, timer_ms = st if st is not None else (None, 0, None)
-            data = pd.concat(list(rows)).sort_values(["ts", "event_id"])
-            days = data["ts"].dt.floor("D")
-            out = []
-            for day, grp in data.groupby(days):
-                epoch_day = int(day.timestamp()) // 86400
-                if max_day is None or epoch_day > max_day:
-                    shift = 63 if max_day is None else min(63, epoch_day - max_day)
-                    mask = ((mask << shift) & ((1 << 63) - 1)) | 1
-                    max_day = epoch_day
-                else:
-                    delta = max_day - epoch_day
-                    if delta >= 63 or (mask >> delta) & 1:
-                        continue  # seen (or beyond the horizon)
-                    mask |= 1 << delta
-                first = grp.iloc[0]
-                out.append((key[0], day, first["ts"]))
-            if timer_ms is not None:
-                self._handle.deleteTimer(timer_ms)
-                timer_ms = None
-            wm = timerValues.getCurrentWatermarkInMs()
-            if wm >= 0:
-                evict_ms = (max_day + 1 + self._evict) * 86_400_000
-                timer_ms = max(evict_ms, wm + 1)
-                self._handle.registerTimer(timer_ms)
-            self._state.update((max_day, mask, timer_ms))
-            yield pd.DataFrame(out, columns=["user_id", "visit_day", "first_ts"])
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            import pandas as pd
-
-            st = self._state.get()
-            if st is not None and st[2] == expiredTimerInfo.getExpiryTimeInMs():
-                self._state.clear()  # horizon passed: drop the key entirely
-            yield pd.DataFrame(columns=["user_id", "visit_day", "first_ts"])
-
-        def close(self):
-            pass
-
-    return (
-        events.select("event_id", "user_id", "ts")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_Uv(evict_after_days),
-            outputStructType=UV_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
-def new_user_fix_stream_tws(events: DataFrame) -> DataFrame:
-    """T1 new-vs-returning fix on `transformWithStateInPandas` — the
-    third TWS port (r11 verdict task 6), covering the shape the other
-    two don't: TIMER-FREE keyed value state (timeMode="none"). Identical
-    semantics and oracle to new_user_fix_stream: is_new=1 only on the
-    key's first-ever event, micro-batch rows ordered (ts, event_id) so
-    replay never changes which event wins.
-
-    API mapping is the minimal one — a single named ValueState("seen")
-    replaces the implicit per-key tuple; no timers, no expiry handler.
-    """
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _NewUser(StatefulProcessor):
-        def init(self, handle):
-            self._state = handle.getValueState("seen", "seen integer")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            seen = 0 if self._state.get() is None else 1
-            data = pd.concat(list(rows)).sort_values(["ts", "event_id"])
-            flags = []
-            for _ in range(len(data)):
-                flags.append(0 if seen else 1)
-                seen = 1
-            self._state.update((1,))
-            yield pd.DataFrame(
-                {
-                    "event_id": data["event_id"].values,
-                    "user_id": data["user_id"].values,
-                    "is_new": flags,
-                }
-            )
-
-        def close(self):
-            pass
-
-    return (
-        events.select("event_id", "user_id", "ts")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_NewUser(),
-            outputStructType=NEW_USER_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-
-
 LINE_KEEPER_OUT_SCHEMA = StructType(
     [
         StructField("line_hash", StringType()),

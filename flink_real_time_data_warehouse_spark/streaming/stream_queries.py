@@ -116,102 +116,6 @@ def bounce_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(bounce_stream(ev, SESSION_GAP_S, BOUNCE_TIMEOUT_S), spark)
 
 
-def _tws_available() -> bool:
-    """transformWithStateInPandas needs the google.protobuf runtime for
-    its state-server protocol (pyspark/sql/streaming/proto). This
-    container ships no protobuf (verified: Spark's own
-    TransformWithStateInPySpark runner init crashes on the import before
-    any user code), so the TWS twin registers only where the runtime
-    exists — the same environmental gating as the Kafka connector jar.
-    The operator itself (streaming/state.bounce_stream_tws) and its plan
-    construction are real and tested either way."""
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except (ImportError, ValueError):
-        return False
-
-
-if _tws_available():  # pragma: no cover — protobuf absent in this container
-
-    @register(
-        "bounce_stream_tws",
-        oracle=f"""
-        WITH ordered AS (
-          SELECT event_id, user_id, ts,
-                 lag(ts)  OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts,
-                 lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_ts
-          FROM events
-        )
-        SELECT event_id, user_id, ts
-        FROM ordered
-        WHERE (prev_ts IS NULL OR epoch(ts) - epoch(prev_ts) > {SESSION_GAP_S})
-          AND (
-            (next_ts IS NOT NULL AND epoch(next_ts) - epoch(ts) > {BOUNCE_TIMEOUT_S})
-            OR (next_ts IS NULL
-                AND epoch(ts) + {BOUNCE_TIMEOUT_S} <= (SELECT epoch(max(ts)) - {WM_S} FROM events))
-          )
-        """,
-        doc=(
-            "T3 on transformWithStateInPandas (Spark 4.x's successor to "
-            "applyInPandasWithState): registerTimer/deleteTimer +"
-            " handleExpiredTimer replace setTimeoutTimestamp/hasTimedOut; "
-            "same oracle as bounce_stream"
-        ),
-    )
-    def bounce_stream_tws_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..streaming.state import bounce_stream_tws
-
-        ev = stream_table(spark, sf_dir, "events").withWatermark(
-            "ts", f"{WM_S} second"
-        )
-        return run_to_memory(
-            bounce_stream_tws(ev, SESSION_GAP_S, BOUNCE_TIMEOUT_S), spark
-        )
-
-    @register(
-        "uv_stream_tws",
-        oracle="""
-        SELECT user_id, date_trunc('day', ts) AS visit_day, min(ts) AS first_ts
-        FROM events GROUP BY 1, 2
-        """,
-        doc=(
-            "T2 on transformWithStateInPandas — the second TWS port, "
-            "exercising the long-lived-state shape (two-long bitmask "
-            "state + rolling event-time EVICTION timer) the CEP port "
-            "doesn't; same oracle as uv_stream"
-        ),
-    )
-    def uv_stream_tws_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..streaming.state import uv_dedup_stream_tws
-
-        ev = stream_table(spark, sf_dir, "events").withWatermark(
-            "ts", f"{WM_S} second"
-        )
-        return run_to_memory(uv_dedup_stream_tws(ev), spark)
-
-    @register(
-        "new_user_tws",
-        oracle="""
-        SELECT event_id, user_id,
-               CASE WHEN row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) = 1
-                    THEN 1 ELSE 0 END AS is_new
-        FROM events
-        """,
-        doc=(
-            "T1 on transformWithStateInPandas — the third TWS port, "
-            "covering the timer-free keyed-value-state shape "
-            "(timeMode='none'); same oracle as new_user_stream"
-        ),
-    )
-    def new_user_tws_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..streaming.state import new_user_fix_stream_tws
-
-        ev = stream_table(spark, sf_dir, "events")
-        return run_to_memory(new_user_fix_stream_tws(ev), spark)
-
-
 @register(
     "session_stats_stream",
     oracle=f"""

@@ -13,13 +13,15 @@ Usage: python scripts/verify_driver.py [name ...]   (no names => all)
 from __future__ import annotations
 
 import math
+import os
 import sys
+import time
 from datetime import datetime
 from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -114,6 +116,7 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, SF_DIR).toPandas()
         except Exception as ex:  # noqa: BLE001
@@ -131,7 +134,8 @@ def main() -> int:
         ok_hash = srows == orows
         status = "OK" if (ok_schema and ok_rows and ok_hash) else "FAIL"
         print(
-            f"{name}: {status} rows={len(srows)}/{len(orows)} schema={ok_schema} hash={ok_hash}",
+            f"{name}: {status} rows={len(srows)}/{len(orows)} schema={ok_schema} hash={ok_hash}"
+            f" ({time.perf_counter() - t0:.1f} s)",
             flush=True,
         )
         if status == "FAIL":

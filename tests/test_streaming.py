@@ -20,7 +20,6 @@ from flink_real_time_data_warehouse_spark.operators.stateful_batch import (
     daily_first_visit,
 )
 from flink_real_time_data_warehouse_spark.sources.streams import (
-    drain_pending_bytes,
     replay_splits,
     stream_dir,
     stream_table,
@@ -431,108 +430,6 @@ def test_dedup_builtin_readmits_after_watermark_expiry(spark, tmp_path):
     assert kept == {"A": 1, "B": 2}  # forever-state: late copy still dropped
 
 
-def test_bounce_stream_tws_plan_construction(spark):
-    """The transformWithStateInPandas port of the bounce CEP builds its
-    full streaming plan — processor wiring, eventTime timeMode, output
-    schema — without the protobuf runtime its state server needs at
-    execution time (absent from this container, gated exactly like the
-    Kafka connector jar)."""
-    from flink_real_time_data_warehouse_spark.sources.streams import stream_table
-    from flink_real_time_data_warehouse_spark.streaming.state import (
-        bounce_stream_tws,
-    )
-
-    from .conftest import TEST_SF_DIR
-
-    ev = stream_table(spark, TEST_SF_DIR, "events").withWatermark("ts", "1 second")
-    df = bounce_stream_tws(ev, gap_s=30, timeout_s=10)
-    assert df.isStreaming
-    assert [f.name for f in df.schema.fields] == ["event_id", "user_id", "ts"]
-    plan = df._jdf.queryExecution().logical().toString()
-    assert "TransformWithStateInPySpark" in plan
-    import pytest
-
-    with pytest.raises(ValueError, match="must be <="):
-        bounce_stream_tws(ev, gap_s=10, timeout_s=11)
-
-
-def test_bounce_stream_tws_matches_legacy_and_evicts_timer(spark, tmp_path):
-    """Full-execution parity (needs the protobuf runtime): the TWS port
-    emits exactly bounce_stream's rows on the events fixture, and a
-    resolved pending start's timer is deleted — a follow-up inside the
-    gap must suppress the stale timer's emission."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas state server needs protobuf",
-    )
-    import os
-    import time
-    from datetime import datetime
-
-    from flink_real_time_data_warehouse_spark.operators.stateful_batch import (
-        BOUNCE_TIMEOUT_S,
-        SESSION_GAP_S,
-    )
-    from flink_real_time_data_warehouse_spark.sources.streams import stream_table
-    from flink_real_time_data_warehouse_spark.streaming.state import (
-        bounce_stream,
-        bounce_stream_tws,
-    )
-
-    from .conftest import TEST_SF_DIR
-
-    ev1 = stream_table(spark, TEST_SF_DIR, "events").withWatermark("ts", "1 second")
-    legacy = sorted(
-        map(tuple, run_to_memory(
-            bounce_stream(ev1, SESSION_GAP_S, BOUNCE_TIMEOUT_S), spark
-        ).collect())
-    )
-    ev2 = stream_table(spark, TEST_SF_DIR, "events").withWatermark("ts", "1 second")
-    tws = sorted(
-        map(tuple, run_to_memory(
-            bounce_stream_tws(ev2, SESSION_GAP_S, BOUNCE_TIMEOUT_S), spark
-        ).collect())
-    )
-    assert tws == legacy and len(tws) > 0
-
-    # timer eviction: epoch 1 = session start; epoch 2 = follow-up 5s
-    # later (inside timeout=10s -> not a bounce, timer must be deleted)
-    # plus a far-future row advancing the watermark past the stale timer.
-    d = str(tmp_path / "ev")
-    e1 = [(1, 7, datetime(2024, 1, 1, 10, 0, 0))]
-    e2 = [
-        (2, 7, datetime(2024, 1, 1, 10, 0, 5)),
-        (3, 99, datetime(2024, 1, 1, 12, 0, 0)),
-    ]
-    for i, rows in enumerate([e1, e2], start=1):
-        tmp = str(tmp_path / f"t{i}")
-        spark.createDataFrame(
-            rows, "event_id long, user_id long, ts timestamp"
-        ).coalesce(1).write.parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        os.makedirs(d, exist_ok=True)
-        dst = os.path.join(d, f"e{i}.parquet")
-        os.replace(os.path.join(tmp, part), dst)
-        os.utime(dst, (time.time() - 50 + i * 10,) * 2)
-    stream = stream_dir(
-        spark, d, "event_id long, user_id long, ts timestamp",
-        max_files_per_trigger=1,
-    ).withWatermark("ts", "1 second")
-    got = sorted(
-        map(tuple, run_to_memory(
-            bounce_stream_tws(stream, gap_s=30, timeout_s=10), spark
-        ).collect())
-    )
-    # event 1 resolved by event 2 (5s gap): no emission for user 7; event
-    # 3 opens a pending whose timer never passes the final watermark.
-    assert got == []
-
-
 def test_line_dedup_stream_first_arrival_wins(spark, tmp_path):
     """Line-level dedup-on-ingest: a line seen in batch 1 must NOT
     re-emit when copies arrive later; the within-batch keeper is the
@@ -571,128 +468,12 @@ def test_line_dedup_stream_first_arrival_wins(spark, tmp_path):
     assert got[h("cookie banner.")] in ((3, 1), (1, 1))
 
 
-def test_uv_stream_tws_plan_construction(spark):
-    """The transformWithStateInPandas port of the daily-UV dedup builds
-    its full streaming plan — processor wiring, eventTime timeMode,
-    output schema — without the protobuf runtime its state server needs
-    at execution time (absent here, gated like bounce_stream_tws)."""
-    from flink_real_time_data_warehouse_spark.sources.streams import stream_table
-    from flink_real_time_data_warehouse_spark.streaming.state import (
-        uv_dedup_stream_tws,
-    )
-
-    from .conftest import TEST_SF_DIR
-
-    ev = stream_table(spark, TEST_SF_DIR, "events").withWatermark("ts", "1 second")
-    df = uv_dedup_stream_tws(ev)
-    assert df.isStreaming
-    assert [f.name for f in df.schema.fields] == ["user_id", "visit_day", "first_ts"]
-    plan = df._jdf.queryExecution().logical().toString()
-    assert "TransformWithStateInPySpark" in plan
-
-
-def test_uv_stream_tws_matches_legacy(spark, tmp_path):
-    """Full-execution parity (needs the protobuf runtime): the TWS port
-    emits exactly uv_dedup_stream's rows on the events fixture."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas state server needs protobuf",
-    )
-    from flink_real_time_data_warehouse_spark.sources.streams import stream_table
-    from flink_real_time_data_warehouse_spark.streaming.pipelines import run_to_memory
-    from flink_real_time_data_warehouse_spark.streaming.state import (
-        uv_dedup_stream,
-        uv_dedup_stream_tws,
-    )
-
-    from .conftest import TEST_SF_DIR
-
-    ev = stream_table(spark, TEST_SF_DIR, "events").withWatermark("ts", "1 second")
-    legacy = sorted(
-        (r.user_id, r.visit_day, r.first_ts)
-        for r in run_to_memory(uv_dedup_stream(ev), spark).collect()
-    )
-    ev2 = stream_table(spark, TEST_SF_DIR, "events").withWatermark("ts", "1 second")
-    tws = sorted(
-        (r.user_id, r.visit_day, r.first_ts)
-        for r in run_to_memory(uv_dedup_stream_tws(ev2), spark).collect()
-    )
-    assert tws == legacy
-
-
-def test_new_user_tws_plan_construction(spark):
-    """The timer-free TWS port (timeMode='none') builds its streaming
-    plan without the protobuf runtime, like the other two ports."""
-    from flink_real_time_data_warehouse_spark.sources.streams import stream_table
-    from flink_real_time_data_warehouse_spark.streaming.state import (
-        new_user_fix_stream_tws,
-    )
-
-    from .conftest import TEST_SF_DIR
-
-    ev = stream_table(spark, TEST_SF_DIR, "events")
-    df = new_user_fix_stream_tws(ev)
-    assert df.isStreaming
-    assert [f.name for f in df.schema.fields] == ["event_id", "user_id", "is_new"]
-    plan = df._jdf.queryExecution().logical().toString()
-    assert "TransformWithStateInPySpark" in plan
-
-
-def test_new_user_tws_matches_legacy(spark):
-    """Full-execution parity (needs the protobuf runtime): the TWS port
-    emits exactly new_user_fix_stream's rows on the events fixture."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas state server needs protobuf",
-    )
-    from flink_real_time_data_warehouse_spark.sources.streams import stream_table
-    from flink_real_time_data_warehouse_spark.streaming.state import (
-        new_user_fix_stream,
-        new_user_fix_stream_tws,
-    )
-
-    from .conftest import TEST_SF_DIR
-
-    legacy = sorted(
-        map(tuple, run_to_memory(
-            new_user_fix_stream(stream_table(spark, TEST_SF_DIR, "events")), spark
-        ).collect())
-    )
-    tws = sorted(
-        map(tuple, run_to_memory(
-            new_user_fix_stream_tws(stream_table(spark, TEST_SF_DIR, "events")),
-            spark,
-        ).collect())
-    )
-    assert tws == legacy and len(tws) > 0
-
-
-def test_tws_registry_gate_behavior():
-    """The three TWS twins appear in the query registry exactly when the
-    protobuf runtime exists — never half of them, never one in a
-    container that can't execute it."""
-    from flink_real_time_data_warehouse_spark.queries import registry
-    from flink_real_time_data_warehouse_spark.streaming.stream_queries import (
-        _tws_available,
-    )
-
-    names = set(registry())
-    tws = {"bounce_stream_tws", "uv_stream_tws", "new_user_tws"}
-    assert (tws <= names) == _tws_available()
-    assert _tws_available() or not (tws & names)
-
-
 def test_concurrent_stream_starts_restore_session_conf(spark, tmp_path):
     """Two threads build and start availableNow queries on one session, as
     a router and a DWS leg do: each start sizes its own shuffle partitions
     from its own sources, and the session's value afterwards equals its
     value before, however the starts interleave."""
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    drain_pending_bytes()  # this thread's notes from earlier tests
     n_orders = table(spark, TEST_SF_DIR, "orders").count()
     errors = []
 
@@ -715,7 +496,6 @@ def test_concurrent_stream_starts_restore_session_conf(spark, tmp_path):
     assert not any(t.is_alive() for t in threads)
     assert errors == []
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    assert drain_pending_bytes() == 0  # the legs' sources stay in their threads
 
 
 def test_stream_dir_backlog_lists_files_on_the_driver(spark, tmp_path):
@@ -753,3 +533,102 @@ def test_tune_session_keeps_explicit_stock_shuffle_partitions(spark):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+EV_DDL = "event_id long, user_id long, ts timestamp"
+
+
+def _event_file(directory, nbytes: int) -> str:
+    """One parquet file of incompressible (event_id, user_id, ts) rows,
+    about `nbytes` on disk, alone in `directory`."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    directory.mkdir()
+    rng = np.random.default_rng(7)
+    n = nbytes // 24
+    path = directory / "part-0.parquet"
+    pq.write_table(pa.table({
+        "event_id": pa.array(rng.integers(0, 2**62, n), pa.int64()),
+        "user_id": pa.array(rng.integers(0, 2**62, n), pa.int64()),
+        "ts": pa.array(rng.integers(0, 2**62, n) // 4096, pa.timestamp("us")),
+    }), str(path), compression="none", use_dictionary=False)
+    assert 0.9 * nbytes < path.stat().st_size < 1.1 * nbytes
+    return str(directory)
+
+
+def _frozen_shuffle_partitions(stream, checkpoint: str) -> int:
+    """Run `stream` to completion (each micro-batch counted, so stateful
+    plans commit their state) and read the shuffle-partition count its
+    first offset-log entry froze: the count every run of that checkpoint
+    keeps."""
+    import json
+    import os
+
+    from flink_real_time_data_warehouse_spark.session import start_foreach_batch
+
+    start_foreach_batch(stream, lambda df, epoch: df.count(), checkpoint).awaitTermination()
+    with open(os.path.join(checkpoint, "offsets", "0")) as f:
+        meta = json.loads(f.read().splitlines()[1])
+    return int(meta["conf"]["spark.sql.shuffle.partitions"])
+
+
+def _few_events(spark, d):
+    """The source over `d`, filtered to (almost) no rows: the plan keeps
+    its source bytes, and a stateful operator above it runs in a blink."""
+    return stream_dir(spark, d, EV_DDL).where(F.col("event_id") < 1024)
+
+
+def _self_join(spark, d):
+    a = _few_events(spark, d).withWatermark("ts", "1 minute")
+    b = _few_events(spark, d).withWatermark("ts", "1 minute").select(
+        F.col("event_id").alias("b_id"), F.col("ts").alias("b_ts"))
+    return a.join(b, (a.event_id == b.b_id)
+                  & b.b_ts.between(a.ts, a.ts + F.expr("INTERVAL 1 MINUTE")))
+
+
+MB = 1024 * 1024
+
+#: (case, source file bytes, frame over the source directory, count chosen
+#: at the test session's 4 shuffle partitions)
+SIZING_CASES = [
+    ("small stateless file source", 5 * MB // 2,
+     lambda spark, d: stream_dir(spark, d, EV_DDL), 3),  # ceil(2.5 MB / 1 MB)
+    ("source over 4 MB", 5 * MB,
+     lambda spark, d: stream_dir(spark, d, EV_DDL), 4),  # session count
+    ("pandas-stateful plan", 5 * MB // 2,
+     lambda spark, d: bounce_stream(_few_events(spark, d).withWatermark("ts", "1 second"),
+                                    SESSION_GAP_S, BOUNCE_TIMEOUT_S), 4),  # session count
+    ("stream-stream join", 5 * MB // 2,
+     _self_join, 2),  # ceil(2 x 2.5 MB / 32 MB), at least 2
+]
+
+
+def test_stream_start_sizes_each_operator_class(spark, tmp_path):
+    """The shuffle-partition count each class of streaming plan freezes
+    at its start: stateless and stream-stream-join plans are sized to
+    their source bytes, big sources and pandas-stateful plans keep the
+    session's count."""
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    got = {
+        case: _frozen_shuffle_partitions(build(spark, _event_file(tmp_path / f"src{i}", nbytes)),
+                                         str(tmp_path / f"ck{i}"))
+        for i, (case, nbytes, build, _) in enumerate(SIZING_CASES)
+    }
+    assert got == {case: parts for case, _, _, parts in SIZING_CASES}
+
+
+def test_unstarted_sources_do_not_size_the_next_start(spark, tmp_path):
+    """Sources that are built and never started leave the next start's
+    shuffle-partition count alone: each start sizes itself from its own
+    plan."""
+    from .conftest import ORACLE_SF_DIR
+
+    clean = _frozen_shuffle_partitions(stream_table(spark, TEST_SF_DIR, "events"),
+                                       str(tmp_path / "ck_clean"))
+    for _ in range(2):
+        stream_table(spark, ORACLE_SF_DIR, "lineitem")
+    got = _frozen_shuffle_partitions(stream_table(spark, TEST_SF_DIR, "events"),
+                                     str(tmp_path / "ck"))
+    assert got == clean
