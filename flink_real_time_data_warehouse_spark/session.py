@@ -151,6 +151,22 @@ def _source_bytes(plan) -> int:
     return total
 
 
+def _python_operators(plan) -> bool:
+    """Whether a plan holds a pandas/Arrow Python operator node
+    (FlatMapGroupsInPandasWithState — applyInPandasWithState — and its
+    kin: MapInPandas, FlatMapGroupsInPandas, PythonMapInArrow, ...). A
+    Python data source leaf (the txlog stream source) is not one."""
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if "InPandas" in name or "InArrow" in name:
+            return True
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return False
+
+
 def stream_partitions(df: DataFrame) -> int:
     """Shuffle/state partition count for starting the streaming query
     over `df` (guide §2.1/§2.2 applied to micro-batches), sized from the
@@ -162,10 +178,11 @@ def stream_partitions(df: DataFrame) -> int:
     two operator classes, so the rule is class-aware (all thresholds from
     same-window min-of-3 sweeps at sf0.1, r14):
 
-    - Python-stateful / pandas plans (applyInPandasWithState etc.): the
-      per-key Python work parallelizes across partitions and dominates;
-      downsizing to 2 took line_dedup_stream 12 -> 56 s. KEEP the
-      session count.
+    - Python-stateful / pandas plans (applyInPandasWithState etc.,
+      matched by operator node name): the per-key Python work
+      parallelizes across partitions and dominates; downsizing to 2 took
+      line_dedup_stream 12 -> 56 s. KEEP the session count. A Python
+      data source (the txlog stream source) is sized like any source.
     - Compute-heavy per-row plans (tar/pixel walk expression trees,
       detected by analyzed-plan size): batch compute wants every core
       (image_phash_sig_stream 5.9 -> 8.0 s at 2 parts). KEEP.
@@ -188,6 +205,7 @@ def stream_partitions(df: DataFrame) -> int:
     try:
         plan = df._jdf.queryExecution().analyzed()
         text = plan.toString()
+        python_ops = _python_operators(plan)
         src_bytes = _source_bytes(plan)
     except Exception:
         src_bytes = 0
@@ -195,7 +213,7 @@ def stream_partitions(df: DataFrame) -> int:
         cur = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if not src_bytes:
         return cur
-    if "Python" in text or "Pandas" in text:
+    if python_ops:
         return cur
     if len(text) > _HEAVY_PLAN_CHARS:
         return cur

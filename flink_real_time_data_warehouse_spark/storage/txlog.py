@@ -275,6 +275,13 @@ def _footer_minmax(path: str, cols: list[str]) -> dict:
     return out
 
 
+def _footer_rows(path: str) -> int:
+    """Row count of a parquet file, from its footer."""
+    import pyarrow.parquet as pq
+
+    return pq.read_metadata(path).num_rows
+
+
 _BLOOM_FPP = 0.01
 _BLOOM_MAX_KEYS = 100_000  # beyond this a file gets no bloom (kept conservatively)
 
@@ -666,18 +673,23 @@ class TxLog:
         key range is [mn, mx] can hold one of them. Up to `_CDC_KEYS_MAX`
         keys are collected sorted and each range is probed by binary
         search, so a batch touching low and high keys does not rewrite
-        every file between. The cap keeps the driver-side collect at
-        micro-batch size (a router dim batch, a CDC epoch); past it — a
-        fact-scale merge — the probe is the keys' true [min, max], one
-        aggregate. ``overlaps`` is None when `keyed` holds no non-null
-        key."""
+        every file between; `key_rows` is then a local relation of the
+        collected keys (built from their Arrow batch, so every key type
+        round-trips exactly), and the rewrite's joins against it re-derive
+        nothing. The cap keeps the driver-side collect at micro-batch size
+        (a router dim batch, a CDC epoch); past it — a fact-scale merge —
+        the probe is the keys' true [min, max], one aggregate, and
+        `key_rows` stays the distinct over `keyed`. ``overlaps`` is None
+        when `keyed` holds no non-null key."""
         key_rows = keyed.where(F.col(key).isNotNull()).select(key).distinct()
-        keys = sorted(r[0] for r in key_rows.limit(self._CDC_KEYS_MAX + 1).collect())
+        collected = key_rows.limit(self._CDC_KEYS_MAX + 1).toArrow()
+        keys = sorted(collected.column(0).to_pylist())
         if not keys:
             return key_rows, None
         if len(keys) > self._CDC_KEYS_MAX:
             # the collected keys are an arbitrary subset: bound the whole set
             return key_rows, _in_range(*key_rows.agg(F.min(key), F.max(key)).first())
+        key_rows = keyed.sparkSession.createDataFrame(collected, key_rows.schema)
 
         def overlaps(mn, mx) -> bool:
             i = bisect_left(keys, mn)
@@ -859,7 +871,9 @@ class TxLog:
         files, where every file's [min,max] spans the whole domain and
         range stats can never drop anything. `identity_order_by` picks
         the deterministic allocation mode for identity columns (see
-        :meth:`add_identity_column`)."""
+        :meth:`add_identity_column`). A frame with no rows commits its
+        version (and epoch) and schema with no data file, so a streaming
+        sink's empty epochs leave no schema-only files behind."""
         # Idempotence fast path: skip the stage write entirely on replay.
         if app_id is not None and app_version is not None:
             st = self.state()
@@ -874,6 +888,12 @@ class TxLog:
             names, schema_json, stats, parts = self._stage(
                 out, stats_cols, partition_by, bloom_cols, cmap=st.cmap
             )
+            empty = {n for n in names if _footer_rows(os.path.join(self.data_path, n)) == 0}
+            if empty:  # Spark writes one schema-only file for a frame with no rows
+                self._delete_staged(sorted(empty))
+                names = [n for n in names if n not in empty]
+                stats = {n: s for n, s in stats.items() if n not in empty}
+                parts = {n: p for n, p in parts.items() if n not in empty}
             # Appends conflict with nothing EXCEPT an intervening
             # rename/drop (ADVICE r7): the staged files and schema_json
             # carry the logical names and cmap AT DERIVE TIME, and replay
@@ -955,9 +975,16 @@ class TxLog:
         partition values re-attach the partition column (dropped from the
         data files by Hive-style layout) as a typed literal per group, then
         union by name with the flat files — no extra shuffle, N parquet
-        scans unioned in one plan. `merge_schema` resolves the union of
-        all files' schemas (columns absent from older files read as null —
-        Delta's additive schema evolution on read).
+        scans unioned in one plan.
+
+        Every file is read with the LOG's schema (``st.schema``, the
+        latest commit's, under the physical names of ``st.cmap``, all
+        fields nullable), as Delta reads every data file with the table
+        schema: a column a file lacks reads as null, whichever files the
+        subset holds, and building the frame runs no schema-inference
+        job. `merge_schema` instead resolves the union of all files'
+        schemas from their footers (Delta's mergeSchema read), as does a
+        log that records no schema.
 
         Files carrying a DELETION VECTOR (``st.dvs``) scan with the
         parquet ``_metadata`` row index and broadcast-anti-join their
@@ -974,7 +1001,15 @@ class TxLog:
                 raise ValueError(f"txlog table {self.path!r} has no commits")
             return spark.createDataFrame([], st.schema)
         merge_schema = merge_schema or positions
-        reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
+        if merge_schema:
+            reader = spark.read.option("mergeSchema", "true")
+        elif st.schema is None:
+            reader = spark.read
+        else:
+            reader = spark.read.schema(StructType([
+                StructField(st.cmap.get(f.name, f.name), f.dataType, True, f.metadata)
+                for f in st.schema.fields
+            ]))
 
         def parquet(names: list[str]) -> DataFrame:
             return reader.parquet(*[os.path.join(self.data_path, n) for n in names])
@@ -1122,7 +1157,8 @@ class TxLog:
         FILE-LEVEL rewrite — the upsert-only case of :meth:`apply_cdc`'s
         keyed-upsert core: only data files whose recorded [min, max] for
         `key` holds one of the update keys (:meth:`_key_probe`) are
-        read, anti-joined against the update keys, and rewritten; other
+        read (with the log's schema: no inference job), anti-joined
+        against the update keys the probe holds, and rewritten; other
         files survive the commit untouched (same names in the manifest)
         — O(touched bytes) per merge, not O(table), which is what lets a
         narrow-key upsert land on a fact-scale table. Files committed

@@ -36,10 +36,12 @@ router itself never takes it (correctness never needs it); it is the
 mutation fence of the non-TxLog SignatureIndex
 (datapipe/signature_index.py).
 
-The routing loop is per *config entry*, not per record — each iteration is
-one declarative filter+project+write that Catalyst optimizes; with N
-config entries the micro-batch is scanned at most N times (cached once
-when N is large).
+The routing loop is per *config entry*, not per record — each entry is
+one declarative filter+project that Catalyst optimizes; with N config
+entries the micro-batch is scanned at most N times (cached once when N is
+large). Each `table` entry is one append; the `dim` entries that share a
+sink table are unioned into ONE merge per micro-batch, the last entry
+winning per key (see :func:`route_micro_batch`).
 """
 
 from __future__ import annotations
@@ -52,6 +54,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..session import start_foreach_batch
 from ..storage import TxLog
@@ -200,10 +203,20 @@ def route_micro_batch(
     (source_table, op) has no config entry are dropped (logged there,
     dropped here). Every write is a TxLog commit: `table` entries append
     idempotently under ``(app_id:source:op, epoch_id)`` (a replayed epoch
-    is skipped by the log), `dim` entries MERGE keyed by the entry's
-    sink_pk (idempotent by construction: replaying the same updates yields
-    the same keyed state). Two configs may share a sink_table — their
-    distinct per-entry app_ids commit independently.
+    is skipped by the log); two table configs may share a sink_table,
+    their distinct per-entry app_ids commit independently.
+
+    `dim` entries MERGE keyed by their sink_pk (idempotent by
+    construction: replaying the same updates yields the same keyed
+    state), ONE merge per dim table per micro-batch: the configs sharing
+    a (sink table, sink_pk) — e.g. a source table's `insert` and `update`
+    entries — are unioned, and for each key only the rows of the LAST
+    such config in list order are kept (null-key rows all land). That is
+    what merging each config's rows in turn leaves, but the dim gets one
+    version per batch, not one per config, so a CDF-enabled dim shows a
+    batch's net change in one version. (One difference: merged alone, a
+    config whose rows all have null keys landed nothing; now its rows
+    land whenever another config of the group carries a key.)
 
     Known defect: `merge` takes one row per key, but a micro-batch that
     carries two `update` rows for one dim key hands it both, and the dim
@@ -213,27 +226,55 @@ def route_micro_batch(
     if len(configs) > 2:
         batch = batch.persist()
     written = []
+    dims: dict[tuple[str, str], list[DataFrame]] = {}
     try:
-        for cfg in configs:
+        for i, cfg in enumerate(configs):
             sub = batch.where(
                 (F.col(table_col) == cfg.source_table) & (F.col(op_col) == cfg.operate_type)
             ).select(*cfg.sink_columns)
-            log = TxLog(sink_table_path(base_dir, cfg.sink_table, cfg.sink_type))
+            path = sink_table_path(base_dir, cfg.sink_table, cfg.sink_type)
             if cfg.sink_type == "dim":
-                log.merge(batch.sparkSession, sub, key=cfg.sink_pk)
+                dims.setdefault((path, cfg.sink_pk), []).append(
+                    sub.withColumn(_CFG_COL, F.lit(i))
+                )
             elif epoch_id is not None:
-                log.append(
+                TxLog(path).append(
                     sub,
                     app_id=f"{app_id}:{cfg.source_table}:{cfg.operate_type}",
                     app_version=epoch_id,
                 )
             else:
-                log.append(sub)
+                TxLog(path).append(sub)
             written.append(cfg.sink_table)
+        for (path, key), subs in dims.items():
+            # the merge's key probe and its write both scan these rows:
+            # cache them so the window's shuffle runs once
+            rows = _last_config_wins(subs, key).persist()
+            try:
+                TxLog(path).merge(batch.sparkSession, rows, key=key)
+            finally:
+                rows.unpersist()
     finally:
         if len(configs) > 2:
             batch.unpersist()
     return written
+
+
+_CFG_COL = "_route_cfg"  # the config index a dim row was routed by
+_LAST_COL = "_route_last"  # the highest such index among its key's rows
+
+
+def _last_config_wins(subs: list[DataFrame], key: str) -> DataFrame:
+    """The rows of one dim table's configs (each tagged with its config
+    index in `_CFG_COL`) that merging them config by config would leave:
+    per key, the rows of the highest index; every null-key row."""
+    rows = subs[0]
+    for s in subs[1:]:
+        rows = rows.unionByName(s, allowMissingColumns=True)
+    if len(subs) > 1:
+        rows = rows.withColumn(_LAST_COL, F.max(_CFG_COL).over(Window.partitionBy(key)))
+        rows = rows.where(F.col(key).isNull() | (F.col(_CFG_COL) == F.col(_LAST_COL)))
+    return rows.drop(_CFG_COL, _LAST_COL)
 
 
 def start_router(

@@ -107,6 +107,99 @@ def test_dim_sink_keeps_one_row_per_key_when_a_batch_updates_it_twice(spark, tmp
     assert len(rows) == 1, sorted(tuple(r) for r in rows)
 
 
+USER_SCHEMA = "source_table string, op string, id long, name string, acct double"
+
+
+def _user_rows(*rows):
+    """ODS user_info rows: (op, id, name, acct)."""
+    return [("user_info", op, i, name, acct) for op, i, name, acct in rows]
+
+
+#: (case, update config's sink_columns, the batch routed after the seed
+#: batch, the dim's rows afterwards as {(id, name, acct)})
+DIM_SHARING_CASES = [
+    ("same key in both configs: the update lands", ("id", "name", "acct"),
+     _user_rows(("insert", 1, "a", 1.0), ("update", 1, "b", 2.0)),
+     {(9, "s", 9.0), (None, "n0", 0.0), (1, "b", 2.0)}),
+    ("update config without acct: acct reads null", ("id", "name"),
+     _user_rows(("insert", 1, "a", 1.0), ("update", 1, "b", 2.0), ("update", 9, "t", 3.0)),
+     {(None, "n0", 0.0), (1, "b", None), (9, "t", None)}),
+    ("null keys in both configs: all land", ("id", "name", "acct"),
+     _user_rows(("insert", None, "n1", 1.0), ("insert", 3, "c", 3.0),
+                ("update", None, "n2", 2.0), ("update", 9, "u", 4.0)),
+     {(None, "n0", 0.0), (None, "n1", 1.0), (3, "c", 3.0), (None, "n2", 2.0), (9, "u", 4.0)}),
+    ("new keys only", ("id", "name", "acct"),
+     _user_rows(("insert", 5, "e", 5.0), ("update", 6, "f", 6.0)),
+     {(9, "s", 9.0), (None, "n0", 0.0), (5, "e", 5.0), (6, "f", 6.0)}),
+]
+
+
+@pytest.mark.parametrize(
+    "update_cols, batch, want", [c[1:] for c in DIM_SHARING_CASES],
+    ids=[c[0] for c in DIM_SHARING_CASES],
+)
+def test_dim_configs_sharing_a_table_land_as_sequential_merges(
+    spark, tmp_path, update_cols, batch, want
+):
+    """An `insert` and an `update` dim config that share `dim_user_info`:
+    one routed batch leaves the rows that merging the insert config's
+    rows and then the update config's rows would leave."""
+    configs = [
+        RouteConfig("user_info", "insert", "dim_user_info", ("id", "name", "acct"),
+                    sink_type="dim", sink_pk="id"),
+        RouteConfig("user_info", "update", "dim_user_info", update_cols,
+                    sink_type="dim", sink_pk="id"),
+    ]
+    sinks = str(tmp_path / "sinks")
+    seed = _user_rows(("insert", 9, "s", 9.0), ("insert", None, "n0", 0.0))
+    route_micro_batch(spark.createDataFrame(seed, USER_SCHEMA), configs, sinks, epoch_id=0)
+    route_micro_batch(spark.createDataFrame(batch, USER_SCHEMA), configs, sinks, epoch_id=1)
+    rows = read_sink(spark, sinks, "dim_user_info", "dim").collect()
+    got = [(r["id"], r["name"], r["acct"]) for r in rows]
+    assert len(got) == len(want) and set(got) == want, sorted(got, key=repr)
+
+
+def test_router_micro_batch_job_count(spark, tmp_path):
+    """The Spark jobs one router micro-batch runs over `rt_pipeline`'s four
+    configs (two fact appends, an `insert` and an `update` dim config that
+    share one dim table), pinned: the router's micro-batch is the long pole
+    of a backlog drain. The shared dim table gets one merge, so one version
+    per batch."""
+    from .test_plan_shape import jobs_run_by
+
+    schema = ("source_table string, op string, id long, user_id long, "
+              "total_amount double, name string, acct double")
+    cols = ("id", "user_id", "total_amount")
+    configs = [
+        RouteConfig("order_info", "insert", "dwd_order_info", cols),
+        RouteConfig("order_info", "update", "dwd_order_update", cols),
+        RouteConfig("user_info", "insert", "dim_user_info", ("id", "name", "acct"), "dim", "id"),
+        RouteConfig("user_info", "update", "dim_user_info", ("id", "name", "acct"), "dim", "id"),
+    ]
+    sinks = str(tmp_path / "sinks")
+
+    def batch(lo):
+        return spark.createDataFrame(
+            [("order_info", op, lo + i, i, 1.5 * i, None, None)
+             for i, op in enumerate(("insert", "update", "delete"))]
+            + [("user_info", op, lo + i, None, None, f"u{i}", float(i))
+               for i, op in enumerate(("insert", "update"))]
+            + [("user_info", "update", lo - 10, None, None, "old", 0.5)],
+            schema,
+        )
+
+    route_micro_batch(batch(10), configs, sinks, epoch_id=0)
+    dim = TxLog(str(tmp_path / "sinks" / "_dims" / "dim_user_info"))
+    v = dim.state().version
+    jobs = jobs_run_by(spark, "router:batch",
+                       lambda: route_micro_batch(batch(20), configs, sinks, epoch_id=1))
+    assert len(jobs) <= 7, f"a router micro-batch ran {len(jobs)} Spark jobs"
+    assert dim.state().version == v + 1
+    got = {r["id"]: (r["name"], r["acct"]) for r in dim.snapshot(spark).collect()}
+    assert got == {0: ("old", 0.5), 10: ("old", 0.5), 11: ("u1", 1.0),
+                   20: ("u0", 0.0), 21: ("u1", 1.0)}
+
+
 def test_apply_cdc_changes_seq_guard_blocks_stale_writes(spark, tmp_path):
     """Replaying an OLDER log segment after a newer one must be a no-op:
     the per-key seq guard (WHEN MATCHED AND src.seq >= tgt.seq) drops

@@ -588,6 +588,16 @@ def _self_join(spark, d):
                   & b.b_ts.between(a.ts, a.ts + F.expr("INTERVAL 1 MINUTE")))
 
 
+def _txlog_stream(spark, d):
+    """A filter over a txlog-source stream of the rows of `d`."""
+    from flink_real_time_data_warehouse_spark.storage import register_txlog_source
+
+    log = TxLog(d + "_txlog")
+    log.append(spark.read.parquet(d).coalesce(1))
+    register_txlog_source(spark)
+    return spark.readStream.format("txlog").option("path", log.path).load().where(F.col("event_id") >= 0)
+
+
 MB = 1024 * 1024
 
 #: (case, source file bytes, frame over the source directory, count chosen
@@ -602,6 +612,8 @@ SIZING_CASES = [
                                     SESSION_GAP_S, BOUNCE_TIMEOUT_S), 4),  # session count
     ("stream-stream join", 5 * MB // 2,
      _self_join, 2),  # ceil(2 x 2.5 MB / 32 MB), at least 2
+    ("small txlog-source stream", 64 * 1024,
+     _txlog_stream, 2),  # a Python data source leaf is no pandas operator
 ]
 
 

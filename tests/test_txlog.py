@@ -518,8 +518,47 @@ def test_schema_evolution_merge_schema_read(tmp_path, spark):
     assert set(evolved.columns) == {"k", "v", "score"}
     got = {r["k"]: r["score"] for r in evolved.collect()}
     assert got == {1: None, 2: 9.5}
-    # without merge_schema the scan resolves one file's schema (legacy)
+    # without merge_schema the scan reads every file with the log's schema
     assert log.snapshot(spark).count() == 2
+
+
+def test_snapshot_reads_every_file_with_the_log_schema(tmp_path, spark):
+    """Without merge_schema every file is read with the log's schema (the
+    latest commit's): a pruned snapshot that reads only a file written
+    before an append added a column returns that column as null, whichever
+    data file name sorts first."""
+    log = TxLog(str(tmp_path / "t"))
+    log.append(spark.createDataFrame([(1, "a")], "k long, v string").coalesce(1),
+               stats_cols=["k"])
+    log.append(spark.createDataFrame([(20, "b", 9.5)], "k long, v string, score double")
+               .coalesce(1), stats_cols=["k"])
+    old = log.snapshot(spark, prune=("k", 0, 10))
+    assert len(old.inputFiles()) == 1
+    assert old.columns == ["k", "v", "score"]
+    assert [tuple(r) for r in old.collect()] == [(1, "a", None)]
+    assert {r["k"]: r["score"] for r in log.snapshot(spark).collect()} == {1: None, 20: 9.5}
+
+
+def test_append_of_no_rows_commits_its_epoch_without_a_data_file(tmp_path, spark):
+    """An append of a frame with no rows (a streaming epoch that emitted
+    nothing) commits its version, epoch and schema but no data file; a
+    replay of the epoch is skipped, and a snapshot of a table with no data
+    files returns the schema."""
+    log = TxLog(str(tmp_path / "t"))
+    empty = spark.createDataFrame([], "k long, v string")
+    assert log.append(empty, app_id="sink", app_version=0) == 0
+    st = log.state()
+    assert st.files == () and st.apps == {"sink": 0} and st.schema == empty.schema
+    assert not [n for n in os.listdir(log.data_path) if n.endswith(".parquet")]
+    assert log.append(empty, app_id="sink", app_version=0) == 0  # replay skipped
+    assert log.state().version == 0
+    snap = log.snapshot(spark)
+    assert snap.schema == empty.schema and snap.count() == 0
+    log.append(spark.createDataFrame([(1, "a")], "k long, v string"),
+               app_id="sink", app_version=1)
+    assert log.append(empty, app_id="sink", app_version=2) == 2
+    assert len(log.state().files) == 1
+    assert [tuple(r) for r in log.snapshot(spark).collect()] == [(1, "a")]
 
 
 def test_history_audit_trail(tmp_path, spark):
@@ -2729,16 +2768,17 @@ def test_row_level_verbs_job_counts(tmp_path, spark):
         len(jobs_run_by(spark, "txlog:merge", lambda: log.merge(spark, upd, "k"))),
         len(jobs_run_by(spark, "txlog:apply_cdc", lambda: log.apply_cdc(spark, ch, "k"))),
     ]
-    assert jobs == [1, 7, 10], f"append/merge/apply_cdc ran {jobs} Spark jobs"
+    assert jobs == [1, 4, 7], f"append/merge/apply_cdc ran {jobs} Spark jobs"
     got = {r["k"]: r["v"] for r in log.snapshot(spark).collect()}
     assert got == {**{k: 0 for k in range(10) if k != 7}, 3: 33, 5: 55, 20: 1}
 
 
 def test_snapshot_of_many_files_lists_them_on_the_driver(tmp_path, spark):
-    """Building a snapshot over 40 data files runs one Spark job, the
-    read's schema inference. Past Spark's parallel-discovery threshold
-    (32 paths by default) an explicit path list is listed by a job with
-    one task per path; the session lists it on the driver instead."""
+    """Building a snapshot over 40 data files runs no Spark job: the
+    read takes the log's schema, and past Spark's parallel-discovery
+    threshold (32 paths by default) an explicit path list would be listed
+    by a job with one task per path; the session lists it on the driver
+    instead."""
     from .test_plan_shape import jobs_run_by
 
     log = TxLog(str(tmp_path / "t"))
@@ -2746,7 +2786,7 @@ def test_snapshot_of_many_files_lists_them_on_the_driver(tmp_path, spark):
         log.commit_files(_stage_rows(log, [i]), schema_json=_SCHEMA_JSON)
     holder = {}
     jobs = jobs_run_by(spark, "txlog:snapshot40", lambda: holder.setdefault("df", log.snapshot(spark)))
-    assert len(jobs) == 1, f"snapshot over 40 files ran {len(jobs)} Spark jobs"
+    assert len(jobs) == 0, f"snapshot over 40 files ran {len(jobs)} Spark jobs"
     assert sorted(r["id"] for r in holder["df"].collect()) == list(range(40))
 
 
